@@ -24,17 +24,17 @@ Resume (A14/A15): per-reducer skip slots from committed checkpoints;
 a fresh dependent starts at its parent's position instead of genesis;
 a root graph resumes from the minimum latest across its members.
 
-Pipelined commits (the reference's unified-branch batch design,
-docs/design/unified-branch-batch-commit.md:107-114): up to
-``pipeline_depth`` epochs keep unpublished commits in flight — epoch
-N+1's transforms and data writes overlap epoch N's writes; manifests
-publish strictly in epoch order (future chaining in store.commit);
-read-your-writes across the window holds by keeping in-flight epochs'
-output DataFrames in every later epoch's pending view, with committed
-reads pinned to one frozen manifest snapshot per epoch so a mid-epoch
-publish can never double-count. This is what makes throughput flat in
-DAG depth (the reference's depth-3 ≈ depth-1 property) and batch-500
-commit cadence comparable to the reference's Postgres fsync knee.
+Commits are synchronous: each epoch publishes on the driver thread
+before the next epoch's plans are built. Argus pipelines its batch
+commits to hide Postgres fsync latency
+(docs/design/unified-branch-batch-commit.md:107-114); a local parquet
+sink has no such latency to hide, and on local[N] overlapping epochs
+measured slower and far less stable (cross-epoch write jobs racing
+over shared cold caches gave 2-6x wall-clock swings). Within an epoch
+work is concurrent: same-level reducers build plans in parallel, every
+table writes concurrently, and the tip-points collect overlaps both. Every committed read of an epoch is pinned to the manifest
+current when the epoch started, so another root publishing mid-epoch
+on a shared store cannot shift what a reducer sees.
 
 Control flow (event sequencing, checkpoint windows) is driver-side
 Python over tiny metadata; block payloads only ever move through
@@ -72,7 +72,7 @@ from argus_spark.lifecycle.store import ParquetStateStore, ReducerStateRow
 # a process-unique namespace; ReducerContext prefixes every view with
 # it. Plans are safe once built: spark.sql() inlines the view's
 # analyzed plan at analysis time, so a later createOrReplaceTempView
-# (next epoch, same driver) never mutates an in-flight commit's plan.
+# (next epoch, same driver) never mutates a plan already built.
 _view_ns_counter = itertools.count()
 
 # refcounted session-wide AQE disable (see IndexDriver.run docstring)
@@ -139,7 +139,6 @@ class ReducerContext:
         blocks: DataFrame,
         pending: dict[str, list[DataFrame]],
         epoch_range: tuple[int, int],
-        table_tips: dict[str, int] | None = None,
         manifest: dict | None = None,
         view_ns: str = "g",
         sub_ns: str = "",
@@ -149,7 +148,6 @@ class ReducerContext:
         self.blocks = blocks
         self._pending = pending
         self.epoch_range = epoch_range
-        self._table_tips = table_tips or {}
         self._manifest = manifest
         # ``sub_ns`` (the reducer's name) further scopes view names
         # WITHIN a driver: same-level reducers build their plans on
@@ -161,35 +159,13 @@ class ReducerContext:
             view_ns = f"{view_ns}_{safe}"
         self.view_ns = view_ns
 
-    def table(
-        self,
-        name: str,
-        min_slot: int | None = None,
-        probe: tuple[DataFrame, list[str]] | None = None,
-    ) -> DataFrame | None:
-        """Committed snapshot ∪ pending epoch outputs. With pipelined
-        commits the pending list spans every in-flight epoch plus this
-        epoch's earlier reducers, so read-your-writes holds even while
-        a predecessor's manifest is still publishing. Committed reads
-        pin to the epoch's frozen manifest snapshot: the pending seed
-        was derived from the same snapshot, so a predecessor publishing
-        mid-epoch can never double-count (rows visible via pending AND
-        a fresher manifest) or vanish.
-
-        ``probe=(df, keys)``: when the store has a bucket layout for
-        ``name`` on ``keys``, prune the committed scan to the buckets
-        the probe keys hash into (store.bucket_ids — one small distinct
-        job). ONLY sound when the result feeds an equi-/semi-join on
-        exactly those keys against the probe set (the spend-probe
-        shape); a no-op for unbucketed tables. Pending epochs are never
-        pruned (small, in-memory)."""
-        buckets = None
-        if probe is not None and hasattr(self.store, "bucket_ids"):
-            pdf, pkeys = probe
-            buckets = self.store.bucket_ids(self.spark, name, pdf)
+    def table(self, name: str, min_slot: int | None = None) -> DataFrame | None:
+        """Committed snapshot ∪ this epoch's earlier reducers' pending
+        outputs. Committed reads pin to the manifest the epoch started
+        on, so a concurrent publish (another root on a shared store)
+        cannot shift committed state mid-epoch."""
         committed = self.store.read_table(
-            self.spark, name, min_slot, manifest=self._manifest,
-            **({"buckets": buckets} if buckets is not None else {}),
+            self.spark, name, min_slot, manifest=self._manifest
         )
         parts = list(self._pending.get(name, []))
         if committed is not None:
@@ -201,19 +177,14 @@ class ReducerContext:
             out = out.unionByName(p)
         return out
 
-    def table_view(
-        self,
-        name: str,
-        min_slot: int | None = None,
-        probe: tuple[DataFrame, list[str]] | None = None,
-    ) -> str | None:
+    def table_view(self, name: str, min_slot: int | None = None) -> str | None:
         """:meth:`table` registered as a temp view, for reducers that
         build their epoch plan with one ``spark.sql`` call (see
         reducers/examples.py — a SQL string analyzes JVM-side in one
         Py4J hop, where the equivalent DataFrame chain pays a round-
         trip per operator). Returns the view name, or None when the
         table has no committed or pending data."""
-        df = self.table(name, min_slot, probe=probe)
+        df = self.table(name, min_slot)
         if df is None:
             return None
         return self.register_view(f"t_{name}", df)
@@ -235,16 +206,10 @@ class ReducerContext:
         return view
 
     def table_tip(self, name: str) -> int:
-        """Highest slot any data for ``name`` reaches — committed OR
-        in-flight (pending). Reducers that fold incrementally from
-        their own previous output must use this, not the committed
-        manifest alone: under pipelined commits the previous epoch's
-        snapshot may still be unpublished but IS visible via
-        :meth:`table`. Returns -1 when the table has never been
-        written."""
-        tip = self._table_tips.get(name)
-        if tip is not None:
-            return tip
+        """Highest slot any committed data for ``name`` reaches in the
+        epoch's pinned manifest, or -1 when the table has never been
+        written. An output that evaluated empty writes no group, so the
+        tip never overstates past the last slot holding data."""
         return max(
             (
                 g.max_slot
@@ -278,17 +243,6 @@ class IndexDriver:
         telemetry=None,  # optional lifecycle.telemetry.Telemetry (A21)
         compact_every: int | None = None,  # epochs between maintenance passes
         compact_min_groups: int = 8,  # only touch tables fragmented past this
-        # Max commits in flight. 1 (default) = synchronous per-epoch
-        # commit: measured FASTER and far more stable on local[N] —
-        # cross-epoch job concurrency (N+1's writes + broadcasts racing
-        # N's over shared cold caches) produced 2-6x wall-clock swings,
-        # while the within-epoch concurrency + SQL plan building already
-        # saturate the local pool. 2+ enables the reference's
-        # unified-batch overlap (docs/design/unified-branch-batch-
-        # commit.md:107-114) — the right setting when the commit path
-        # has real I/O latency to hide (object store, JDBC sink).
-        pipeline_depth: int = 1,
-        cache_min_blocks: int = 0,  # cache epoch outputs at/above this size
     ) -> None:
         self.spark = spark
         self.registry = registry
@@ -301,15 +255,6 @@ class IndexDriver:
         self.window_k = window_k
         self.max_rollback_slots = max_rollback_slots
         self.telemetry = telemetry
-        # A backend without snapshot reads (e.g. DuckDBStateStore —
-        # a live SQL database has one current state, no pinned
-        # manifests) cannot give each pipelined epoch a frozen view,
-        # so commits degrade to synchronous — exactly the reference's
-        # EF/Postgres per-batch transaction shape.
-        if not getattr(store, "supports_snapshots", True):
-            pipeline_depth = 1
-        self.pipeline_depth = max(1, pipeline_depth)
-        self.cache_min_blocks = cache_min_blocks
         # process-unique temp-view namespace (see _view_ns_counter)
         self.view_ns = f"d{next(_view_ns_counter)}"
         registry.validate()
@@ -334,34 +279,12 @@ class IndexDriver:
         self._windows: dict[str, list[Point]] = {}
         self._deferred_states = False  # A10: windows advanced but not persisted
         self._resume: dict[str, int] = {}
-        # highest slot any data for a table reaches, committed or
-        # in-flight — the pending-aware tip reducers see via
-        # ctx.table_tip (pipelined read-your-writes)
-        self._table_tips: dict[str, int] = {}
-        # pipelined-commit state: one entry per unpublished epoch —
-        # {future, pending: {table: [DataFrame]}, cached: [DataFrame]}
-        self._inflight: list[dict] = []
-        self._retired: dict | None = None  # reaped, released next reap
         # pools created lazily at first flush (tests build many drivers
         # that never run); threads are reaped by executor atexit
-        self._commit_pool_ = None
         self._ctl_pool_ = None
         self._plan_pool_ = None
         self._load_state()
         self.stats = DriverStats()
-
-    @property
-    def _commit_pool(self):
-        # commit pool: one worker per in-flight slot, so epoch N+1's
-        # data writes overlap epoch N's (publish order enforced by
-        # future chaining inside store.commit)
-        if self._commit_pool_ is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            self._commit_pool_ = ThreadPoolExecutor(
-                max_workers=self.pipeline_depth
-            )
-        return self._commit_pool_
 
     @property
     def _plan_pool(self):
@@ -377,22 +300,18 @@ class IndexDriver:
 
     @property
     def _ctl_pool(self):
-        # tip-points collects — separate pool so a commit task waiting
-        # on its tips future can never deadlock behind it
+        # one worker for the tip-points collect, so it overlaps the
+        # epoch's plan building and data writes
         if self._ctl_pool_ is None:
             from concurrent.futures import ThreadPoolExecutor
 
-            self._ctl_pool_ = ThreadPoolExecutor(max_workers=self.pipeline_depth)
+            self._ctl_pool_ = ThreadPoolExecutor(max_workers=1)
         return self._ctl_pool_
 
     # ---------------- state / resume (A13-A15) ----------------
 
     def _load_state(self) -> None:
         states = self.store.reducer_states()
-        self._table_tips = {
-            tbl: max((g.max_slot for g in self.store.table_groups(tbl)), default=-1)
-            for tbl in self.store.current_manifest()["tables"]
-        }
         for r in self._order:
             st = states.get(r.name)
             self._windows[r.name] = st.window() if st else []
@@ -423,7 +342,7 @@ class IndexDriver:
         """Process an iterable of ChainEvent (or chain_events rows) in
         order. Returns stats. Restartable: committed state resumes.
 
-        AQE is disabled for the duration of the run: concurrent epoch
+        AQE is disabled for the duration of the run: concurrent table
         write jobs racing to first-materialize a shared cached plan
         under AQE can transiently evaluate EMPTY (observed ~1/10 deep-
         rollback e2e runs: a 2,077-row cached output wrote 0 rows while
@@ -441,29 +360,6 @@ class IndexDriver:
             _aqe_release(self.spark)
 
     def _run(self, events) -> DriverStats:
-        try:
-            return self._run_inner(events)
-        except BaseException:
-            # Fail-fast (A18) hygiene: a reducer/commit failure must not
-            # leave commit write jobs running past run()'s AQE-refcount
-            # release (the documented empty-write race) or leak cached
-            # epoch DataFrames. Settle every in-flight commit before
-            # propagating; their own errors are secondary here.
-            for fl in self._inflight:
-                try:
-                    fl["future"].result()
-                except Exception:
-                    pass
-            while self._inflight:
-                fl = self._inflight.pop(0)
-                for df in fl["cached"]:
-                    df.unpersist()
-                if fl["blocks"] is not None:
-                    fl["blocks"].unpersist()
-            self._release_retired()
-            raise
-
-    def _run_inner(self, events) -> DriverStats:
         t0 = time.monotonic()
         pending: list[int] = []
         batch_opened = time.monotonic()
@@ -498,7 +394,6 @@ class IndexDriver:
                 raise ValueError(f"unknown action {ev.action!r}")
         if pending:  # drain trigger (at tip / end of feed)
             self._flush(pending)
-        self._drain_inflight()  # publish the pipeline tail
         if self._deferred_states:  # persist windows deferred by empty epochs
             self._commit_states_only()
         self.stats.wall_seconds = time.monotonic() - t0
@@ -507,21 +402,9 @@ class IndexDriver:
     # ---------------- epoch flush (A8, A9, A11) ----------------
 
     def _flush(self, slots: list[int]) -> None:
-        """Build one epoch's plans and submit its commit. Commits are
-        PIPELINED (the reference's unified-batch design,
-        docs/design/unified-branch-batch-commit.md:107-114): up to
-        ``pipeline_depth`` epochs have unpublished commits in flight;
-        epoch N+1's transforms and data writes overlap epoch N's
-        writes, and the manifest publishes strictly in epoch order
-        (store.commit chains on the predecessor future). Read-your-
-        writes across the window holds because in-flight epochs'
-        output DataFrames stay in the pending dict every later
-        ReducerContext sees."""
-        # admission: free one in-flight slot (oldest first, ordered) —
-        # also surfaces any async commit failure here, fail-fast A18
-        while len(self._inflight) >= self.pipeline_depth:
-            self._reap_one()
-
+        """Build one epoch's plans and commit it synchronously: data
+        writes, the checkpoint advance and the manifest publish all
+        land before this returns."""
         lo, hi = min(slots), max(slots)
         blocks = self.blocks_df.filter(
             (F.col("slot") >= lo) & (F.col("slot") <= hi)
@@ -534,43 +417,19 @@ class IndexDriver:
             # cache computation across the concurrent consumers.
             blocks = blocks.cache()
 
-        # Freeze ONE manifest snapshot for the whole epoch, and derive
-        # BOTH the committed reads and the pending seed from it: an
-        # in-flight epoch counts as pending iff the snapshot doesn't
-        # contain it yet (its hi is above the snapshot's resume floor).
-        # Snapshot + seed always agree, so a predecessor publishing mid-
-        # epoch can't double-count or drop rows. Manifests are immutable
-        # once written, so the snapshot stays readable throughout.
+        # One manifest snapshot for the whole epoch: every committed
+        # read and table tip resolves against it. Manifests are
+        # immutable once written, so it stays readable throughout.
         snapshot = self.store.current_manifest()
-        # floor over THIS graph's reducers only (a store shared with
-        # another driver's graph may hold lagging foreign states):
-        # every epoch commit advances all of _order to its hi, so an
-        # in-flight epoch is in the snapshot iff floor >= its hi
-        snap_states = snapshot["reducer_states"]
-        published_floor = min(
-            (
-                snap_states.get(r.name, {}).get("resume_slot", -1)
-                for r in self._order
-            ),
-            default=-1,
-        )
-        pending_ctx: dict[str, list[DataFrame]] = {}
-        for fl in self._inflight:
-            if fl["hi"] <= published_floor:
-                continue  # already visible in the snapshot
-            for tbl, dfs in fl["pending"].items():
-                pending_ctx.setdefault(tbl, []).extend(dfs)
-        pending_new: dict[str, list[DataFrame]] = {}
+        pending: dict[str, list[DataFrame]] = {}
         cached_out: list[DataFrame] = []
-        appends: dict[str, tuple[DataFrame, int, int]] = {}
         epoch_times: dict[str, float] = {}
-        tips_snapshot = dict(self._table_tips)
 
         # checkpoint advance source: the newest K points of the epoch
         # (folding newest K gives the same window as folding all N).
         # Control-plane (a few rows, not a data-path collect) — runs
         # concurrently with plan building and the data writes; the
-        # commit task resolves it only at manifest assembly.
+        # commit resolves it only at manifest assembly.
         def _tips() -> list[Point]:
             return [
                 Point(slot=row["slot"], hash=row["hash"])
@@ -581,21 +440,13 @@ class IndexDriver:
             ][::-1]
 
         tips_fut = self._ctl_pool.submit(_tips)
-        # Cache epoch outputs only when the epoch is large enough that
-        # recomputing a lineage (its own write + each dependent's plan)
-        # costs more than materializing it: small epochs run fastest
-        # with fully independent, recomputed write jobs — no block-lock
-        # coupling between levels — while backfill-sized epochs
-        # materialize each lineage once.
-        cache_outputs = n_blocks >= self.cache_min_blocks
 
         def _apply_one(r: Reducer) -> tuple[str, dict[str, DataFrame], float]:
             floor = resume_before[r.name]
             my_blocks = blocks.filter(F.col("slot") > floor) if floor >= lo else blocks
             ctx = ReducerContext(
-                self.spark, self.store, my_blocks, pending_ctx, (lo, hi),
-                table_tips=tips_snapshot, manifest=snapshot,
-                view_ns=self.view_ns, sub_ns=r.name,
+                self.spark, self.store, my_blocks, pending, (lo, hi),
+                manifest=snapshot, view_ns=self.view_ns, sub_ns=r.name,
             )
             t = time.monotonic()
             outputs = r.apply(ctx) or {}
@@ -636,171 +487,72 @@ class IndexDriver:
                         self.stats.reducer_seconds.get(name, 0.0) + dt
                     )
                     for tbl, df in outputs.items():
-                        # EVERY output is cached, not just DAG-
-                        # dependents' parents: under pipelined commits
-                        # the NEXT epoch reads this epoch's pending
-                        # outputs (temporal dependence), and an
-                        # uncached incremental output — e.g. the
-                        # balance snapshot, whose plan references the
-                        # previous snapshot — would otherwise recompute
-                        # its entire epoch ancestry every epoch
-                        # (measured: 3x lifecycle collapse). The cache
-                        # materializes once under the block-manager
-                        # write lock during this epoch's own sink
-                        # write.
-                        if cache_outputs:
-                            df = df.cache()
-                            cached_out.append(df)
-                        pending_ctx.setdefault(tbl, []).append(df)
-                        pending_new.setdefault(tbl, []).append(df)
+                        # Every output is cached: its own sink write and
+                        # each dependent's plan share one
+                        # materialization (block-manager write locks
+                        # compute a cached partition once however many
+                        # concurrent writes demand it).
+                        df = df.cache()
+                        cached_out.append(df)
+                        pending.setdefault(tbl, []).append(df)
 
-            for tbl, dfs in pending_new.items():
+            appends: dict[str, tuple[DataFrame, int, int]] = {}
+            for tbl, dfs in pending.items():
                 df = dfs[0]
                 for d in dfs[1:]:
                     df = df.unionByName(d)
                 appends[tbl] = (df, lo, hi)
-        except Exception:
-            for df in cached_out:
-                df.unpersist()
-            if blocks_cached:
-                blocks.unpersist()
-            raise
 
-        # Advance the replay cursor SYNCHRONOUSLY: the next event in
-        # run() must see this epoch's blocks as consumed, or a replayed
-        # block arriving inside the pipeline window would double-apply.
-        # The PERSISTED resume in this epoch's manifest uses the values
-        # captured here (max(before, hi)) — never a later epoch's.
-        for r in self._order:
-            self._resume[r.name] = max(self._resume[r.name], hi)
-        for tbl in appends:
-            self._table_tips[tbl] = max(self._table_tips.get(tbl, -1), hi)
+            def _states() -> dict[str, ReducerStateRow]:
+                # runs inside store.commit after the data writes land
+                tip_points = tips_fut.result()
+                for r in self._order:
+                    w = self._windows[r.name]
+                    for p in tip_points:
+                        if p.slot > resume_before[r.name]:
+                            w = window_roll_forward(w, p, self.window_k)
+                    self._windows[r.name] = w
+                    self._resume[r.name] = max(resume_before[r.name], hi)
+                return self._state_rows()
 
-        def _states() -> dict[str, ReducerStateRow]:
-            # Runs inside the ordered commit task after data writes
-            # land: predecessor states_fn has already run, so the
-            # window fold composes epoch-by-epoch in order.
-            tip_points = tips_fut.result()
-            for r in self._order:
-                w = self._windows[r.name]
-                for p in tip_points:
-                    if p.slot > resume_before[r.name]:
-                        w = window_roll_forward(w, p, self.window_k)
-                self._windows[r.name] = w
-            return self._state_rows_at(
-                {r.name: max(resume_before[r.name], hi) for r in self._order}
-            )
-
-        # Size output files to the epoch, not the session: a 500-block
-        # epoch's outputs fit one row-group — writing them as 32
-        # tasks/files costs ~2x the write (and 32-way file fan-out per
-        # table per epoch). ~1 output partition per 250 blocks. The cap
-        # divides the executor pool across the epoch's CONCURRENT table
-        # writes — N tables × full width saturates every task slot and
-        # serializes the "parallel" writes into waves (measured as the
-        # depth-3 retention killer); the epoch's writes as a whole get
-        # the pool. HOW the width is applied depends on the regime:
-        # an epoch whose natural width fits the cap coalesces (free);
-        # a bigger epoch repartitions — coalesce would propagate the
-        # narrow width up through its compute-heavy lineage (measured
-        # 4x knee collapse), while one small shuffle decouples lineage
-        # parallelism from output width.
-        par = self.spark.sparkContext.defaultParallelism
-        width_cap = max(1, par // max(1, len(appends)))
-        natural = max(1, n_blocks // 250)
-        write_parts = min(natural, width_cap)
-        write_shuffle = natural > width_cap
-        prev_fut = self._inflight[-1]["future"] if self._inflight else None
-
-        def _commit_task():
+            # Size output files to the epoch, not the session: a 500-
+            # block epoch's outputs fit one row-group — writing them as
+            # 32 tasks/files costs ~2x the write (and 32-way file fan-
+            # out per table per epoch). ~1 output partition per 250
+            # blocks. The cap divides the executor pool across the
+            # epoch's CONCURRENT table writes — N tables × full width
+            # saturates every task slot and serializes the "parallel"
+            # writes into waves; the epoch's writes as a whole get the
+            # pool. HOW the width is applied depends on the regime: an
+            # epoch whose natural width fits the cap coalesces (free);
+            # a bigger epoch repartitions — coalesce would propagate
+            # the narrow width up through its compute-heavy lineage
+            # (measured 4x knee collapse), while one small shuffle
+            # decouples lineage parallelism from output width.
+            par = self.spark.sparkContext.defaultParallelism
+            width_cap = max(1, par // max(1, len(appends)))
+            natural = max(1, n_blocks // 250)
             manifest = self.store.commit(
                 appends=appends,
                 states_fn=_states,
                 meta={"epoch": [lo, hi], "n_blocks": n_blocks},
-                write_parts=write_parts,
-                write_shuffle=write_shuffle,
-                after=prev_fut,
+                write_parts=min(natural, width_cap),
+                write_shuffle=natural > width_cap,
             )
-            if self.telemetry is not None:
-                self.telemetry.record_epoch(
-                    manifest["id"], lo, hi, n_blocks, epoch_times
-                )
-            return manifest
-
-        fut = self._commit_pool.submit(_commit_task)
-        self._inflight.append(
-            {
-                "future": fut,
-                "pending": pending_new,
-                "cached": cached_out,
-                "blocks": blocks if blocks_cached else None,
-                "hi": hi,
-            }
-        )
+        finally:
+            for df in cached_out:
+                df.unpersist()
+            if blocks_cached:
+                blocks.unpersist()
+        # A10 — a commit that wrote no data still published (cheap local
+        # JSON); defer-if-empty is tracked for parity
+        self._deferred_states = not manifest.get("_wrote_data", True)
+        if self.telemetry is not None:
+            self.telemetry.record_epoch(manifest["id"], lo, hi, n_blocks, epoch_times)
         self.stats.blocks += n_blocks
         self.stats.epochs += 1
         if self.compact_every and self.stats.epochs % self.compact_every == 0:
-            self._drain_inflight()
             self._maintain()
-
-    def _reap_one(self) -> None:
-        """Wait for the OLDEST in-flight commit and surface its failure
-        (fail-fast A18). Its cached resources are NOT released yet: the
-        SUCCESSOR epoch's still-running commit references this epoch's
-        pending plans (temporal read-your-writes), and unpersisting
-        under it forces a deep lineage recompute. Resources retire one
-        generation deferred — freed when the next reap (or the drain
-        tail) proves no running commit can reference them."""
-        fl = self._inflight.pop(0)
-        try:
-            manifest = fl["future"].result()
-            # A10 — if nothing was written, the manifest still
-            # published (cheap local JSON); defer-if-empty is tracked
-            # for parity
-            self._deferred_states = not manifest.get("_wrote_data", True)
-            # Tip truth-up: _flush advances _table_tips to the epoch's
-            # hi OPTIMISTICALLY (the next epoch's read-your-writes needs
-            # it before the commit lands), but an output that evaluated
-            # EMPTY writes no group — leaving the tip pointing at a
-            # slot holding no data, which an incremental reducer reading
-            # "slot = prev_slot" would see as lost state. Once the
-            # commit publishes, re-derive each touched table's tip from
-            # the authoritative manifest, keeping still-in-flight
-            # successors' optimistic his.
-            for tbl in fl["pending"]:
-                committed = max(
-                    (
-                        g["max_slot"]
-                        for g in manifest.get("tables", {}).get(tbl, [])
-                    ),
-                    default=-1,
-                )
-                pending_hi = max(
-                    (f2["hi"] for f2 in self._inflight if tbl in f2["pending"]),
-                    default=-1,
-                )
-                self._table_tips[tbl] = max(committed, pending_hi)
-        finally:
-            self._release_retired()
-            self._retired = fl
-
-    def _release_retired(self) -> None:
-        fl = getattr(self, "_retired", None)
-        self._retired = None
-        if not fl:
-            return
-        for df in fl["cached"]:
-            df.unpersist()
-        if fl["blocks"] is not None:
-            fl["blocks"].unpersist()
-
-    def _drain_inflight(self) -> None:
-        """Barrier: publish every in-flight commit. Called before any
-        operation that must observe (or mutate) final committed state —
-        rollback, maintenance, end-of-feed."""
-        while self._inflight:
-            self._reap_one()
-        self._release_retired()
 
     def _maintain(self) -> None:
         """Scheduled maintenance: frozen-zone compaction + vacuum.
@@ -819,14 +571,6 @@ class IndexDriver:
         self.store.vacuum()
 
     def _state_rows(self) -> dict[str, ReducerStateRow]:
-        return self._state_rows_at({r.name: self._resume[r.name] for r in self._order})
-
-    def _state_rows_at(self, resume: dict[str, int]) -> dict[str, ReducerStateRow]:
-        """State rows with an EXPLICIT per-reducer resume cursor. A
-        pipelined epoch must persist its own cursor (max(before, its
-        hi)) — reading self._resume from the commit thread could leak a
-        LATER epoch's cursor into an earlier manifest, claiming
-        not-yet-published blocks as committed (crash ⇒ skipped blocks)."""
         existing = self.store.reducer_states()
         out = {}
         for r in self._order:
@@ -836,7 +580,7 @@ class IndexDriver:
                 created_at=prev.created_at if prev else time.time(),
                 start_point=prev.start_point if prev else None,
                 latest_points=[p.as_dict() for p in self._windows[r.name]],
-                resume_slot=resume[r.name],
+                resume_slot=self._resume[r.name],
             )
         return out
 
@@ -884,10 +628,6 @@ class IndexDriver:
         adjustment. Requires declared table ownership when overrides or
         exclusions are used (tables of excluded reducers must be
         distinguishable from the rest)."""
-        # Pre-fork in-flight commits must publish before the retraction
-        # (A12 ordering: the open batch is valid chain history); also
-        # settles windows/resume, which the retraction rewrites.
-        self._drain_inflight()
         overrides = dict(overrides or {})
         excluded = set(exclude or ())
         known = {r.name for r in self._order}
@@ -950,8 +690,3 @@ class IndexDriver:
             spark=self.spark,
             meta=meta or {"rollback_to": delete_from},
         )
-        # retraction may have dropped/rewritten tip groups
-        self._table_tips = {
-            tbl: max((g.max_slot for g in self.store.table_groups(tbl)), default=-1)
-            for tbl in self.store.current_manifest()["tables"]
-        }

@@ -37,11 +37,11 @@ ever transits the driver as a Python object:
     export. What it is NOT is an ``.arrow() -> pandas`` driver funnel —
     at 100 TB the committed UTxO set cannot fit the driver.
 
-No snapshot reads: a live database has one current state, so
-``supports_snapshots = False`` and IndexDriver degrades pipelined
-commits to synchronous per-epoch transactions — exactly the reference's
-EF behaviour (its unified design overlaps commit with *processing*,
-never two commits).
+No snapshot reads: a live database has one current state, so the
+``manifest=`` argument of :meth:`read_table` / :meth:`table_groups` is
+accepted and ignored. The driver commits each epoch synchronously before
+building the next, so live state is the state every epoch started on —
+the reference's EF per-batch transaction shape.
 """
 
 from __future__ import annotations
@@ -67,8 +67,6 @@ def _q(name: str) -> str:
 
 
 class DuckDBStateStore:
-    supports_snapshots = False
-
     def __init__(self, db_path: str, staging_dir: str | None = None) -> None:
         import duckdb
 
@@ -117,7 +115,7 @@ class DuckDBStateStore:
 
     def current_manifest(self) -> dict:
         """Manifest facade over live catalog state, so IndexDriver's
-        snapshot/floor/tips plumbing works unchanged. ``tables`` maps
+        manifest pinning and table tips work unchanged. ``tables`` maps
         each known table to its synthetic single group."""
         with self._lock:
             tables = {
@@ -214,10 +212,10 @@ class DuckDBStateStore:
         self._con.execute(f"COPY ({sql}) TO '{out}' (FORMAT PARQUET)")
         open(ok, "w").close()
         # bound export accumulation: reap this table's exports ≥2
-        # versions old. Safe under the synchronous-commit contract
-        # (supports_snapshots=False ⇒ pipeline_depth=1): plans built
-        # against older exports were fully evaluated when their epoch's
-        # commit returned, so nothing lazy references them anymore.
+        # versions old. Safe because the driver commits synchronously:
+        # plans built against older exports were fully evaluated when
+        # their epoch's commit returned, so nothing lazy references
+        # them anymore.
         reads_dir = os.path.dirname(path)
         for e in os.listdir(reads_dir):
             stem = e[: -len(".empty")] if e.endswith(".empty") else e
@@ -272,11 +270,9 @@ class DuckDBStateStore:
         spark: SparkSession | None = None,
         meta: dict[str, Any] | None = None,
         upserts: dict[str, tuple[DataFrame, list[str], int, int]] | None = None,
-        waves=None,
         states_fn=None,
         write_parts: int | None = None,
         write_shuffle: bool = False,
-        after=None,
         retract_tables: list[str] | None = None,
     ) -> dict:
         """One database transaction: retraction + appends + upserts +
@@ -284,9 +280,6 @@ class DuckDBStateStore:
         as parquet (distributed write), the transaction ingests the
         staged files; a crash before COMMIT leaves only orphaned
         staging files (swept on the next commit)."""
-        if after is not None:
-            after.result()
-
         # Phase 1 — distributed staging writes (outside the db tx),
         # registered in-flight so a concurrent vacuum can't sweep them.
         staged: dict[str, tuple[str, bool, list[str] | None]] = {}
@@ -413,7 +406,7 @@ class DuckDBStateStore:
         """Sweep orphaned write-staging batches (crashes before COMMIT)
         and read exports older than the current commit version. Only
         safe when no epoch plans still lazily reference old exports —
-        the driver calls this after draining in-flight commits.
+        the driver calls this between epochs, after a commit returned.
         In-flight staging batches (registered by a concurrent commit's
         phase 1) are never touched."""
         removed = 0

@@ -9,13 +9,14 @@ The Spark shape: split the registry into per-root sub-registries
 over the SAME store, and run them on concurrent threads. Safety comes
 from properties the store/driver already provide:
 
-  * commits interleave without lost updates — manifest assembly/publish
-    serializes under the store's publish lock, each commit re-reading
-    the latest manifest (and ``_publish`` hard-fails on a version
-    collision);
-  * each driver's pipelined-epoch bookkeeping (published floor, tips)
-    was already scoped to ITS OWN reducers, so foreign subgraphs'
-    states in the shared manifest don't confuse it;
+  * commits and compactions interleave without lost updates — manifest
+    read/assembly/publish serializes under the store's publish lock,
+    each re-reading the latest manifest (and ``_publish`` hard-fails on
+    a version collision);
+  * each driver pins its epoch's committed reads to one manifest and
+    derives resume cursors from ITS OWN reducers' states, so foreign
+    subgraphs' commits and states in the shared manifest don't confuse
+    it;
   * rollback retraction is scoped to the subgraph's declared tables
     (``retract_tables``), so one chain's reorg never deletes a
     different subgraph's rows — the per-root chain-connection semantics.

@@ -54,27 +54,20 @@ class FileGroup:
     min_slot: int
     max_slot: int
     rows: int
-    # written under a bucket spec: part-file NNNNN == bucket id, so
-    # probe reads can prune to the buckets a key set hashes into
-    bucketed: bool = False
 
     def as_dict(self) -> dict:
-        d = {
+        return {
             "path": self.path,
             "min_slot": self.min_slot,
             "max_slot": self.max_slot,
             "rows": self.rows,
         }
-        if self.bucketed:
-            d["bucketed"] = True
-        return d
 
     @staticmethod
     def from_dict(d: dict) -> "FileGroup":
-        return FileGroup(
-            d["path"], d["min_slot"], d["max_slot"], d["rows"],
-            d.get("bucketed", False),
-        )
+        # manifests written by older versions may carry "bucketed": true
+        # on a group; it is ignored and the group reads whole
+        return FileGroup(d["path"], d["min_slot"], d["max_slot"], d["rows"])
 
 
 @dataclass
@@ -102,17 +95,13 @@ class ParquetStateStore:
         # per-epoch parquet footer sampling job in read_table (measured
         # ~0.1s per table per epoch on the lifecycle critical path).
         self._schemas: dict[str, Any] = {}
-        # serializes manifest read→assemble→publish for PIPELINED
-        # commits (several in flight from one driver process); the
-        # cross-process story stays the advisory SingleInstanceLock
+        # serializes manifest read→assemble→publish across threads of
+        # one process (MultiRootDriver runs one driver per root on a
+        # shared store; compaction publishes through the same step);
+        # the cross-process story stays the advisory SingleInstanceLock
         self._publish_lock = threading.Lock()
         os.makedirs(os.path.join(root, MANIFEST_DIR), exist_ok=True)
         os.makedirs(os.path.join(root, DATA_DIR), exist_ok=True)
-        # declared bucket layouts (persisted in the manifest so a
-        # restarted driver keeps writing the same layout)
-        self._bucketing: dict[str, dict] = dict(
-            self.current_manifest().get("bucketed_tables", {})
-        )
         # group paths being written by commits that have not published
         # yet: vacuum must never sweep these. Commits write data files
         # BEFORE the manifest rename, so "absent from the current
@@ -120,45 +109,6 @@ class ParquetStateStore:
         # driver's in-flight epoch (MultiRootDriver shares one store).
         self._inflight_lock = threading.Lock()
         self._inflight_groups: set[str] = set()
-
-    # ---------------- bucketed layout (hot-probe scale path) ----------------
-
-    def set_bucketing(self, name: str, keys: list[str], n_buckets: int) -> None:
-        """Declare that ``name``'s file-groups are written hash-bucketed
-        by ``keys`` into ``n_buckets`` part-files per group (the
-        operators/bucketed.py layout contract applied to the lifecycle
-        sink). Spark's ``repartition(n, cols)`` is Murmur3
-        ``pmod(hash(cols), n)`` and part-file numbering follows the
-        partition id, so bucket membership is computable engine-side
-        (``bucket_ids``) and probe reads prune to the buckets a key set
-        hashes into — the spend probe stops scanning the whole UTxO set
-        and reads only candidate buckets. Pruned reads are sound ONLY
-        for consumers that equi-join/semi-join on exactly ``keys``.
-        Declare before first write; groups written earlier stay
-        unbucketed and are never pruned (correct, just unprunable)."""
-        prev = self._bucketing.get(name)
-        spec = {"keys": list(keys), "n": int(n_buckets)}
-        if prev is not None and prev != spec:
-            raise ValueError(f"bucket spec for {name!r} changed: {prev} -> {spec}")
-        self._bucketing[name] = spec
-
-    def bucket_ids(self, spark, name: str, probe_df: DataFrame) -> list[int] | None:
-        """Distinct bucket ids the probe keys hash into (None when the
-        table has no bucket spec). Control-plane: ≤ n_buckets ints.
-        ``probe_df`` columns must be named exactly like the spec keys."""
-        spec = self._bucketing.get(name)
-        if spec is None:
-            return None
-        from pyspark.sql import functions as F
-
-        rows = (
-            probe_df.select(
-                F.pmod(F.hash(*spec["keys"]), F.lit(spec["n"])).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return sorted(r.b for r in rows)
 
     # ---------------- manifest plumbing ----------------
 
@@ -221,7 +171,6 @@ class ParquetStateStore:
         name: str,
         min_slot: int | None = None,
         manifest: dict | None = None,
-        buckets: list[int] | None = None,
     ) -> DataFrame | None:
         """Snapshot read. ``min_slot`` prunes file-groups by their slot
         range before Spark ever lists them (manifest-level partition
@@ -229,16 +178,9 @@ class ParquetStateStore:
         merge-on-read: latest version per key wins.
 
         ``manifest`` pins the read to an explicit snapshot (time-travel
-        — the pipelined driver reads every epoch against one frozen
-        manifest so concurrent publishes can't shift committed state
+        — the driver reads every epoch against the manifest it started
+        on, so another root's publish can't shift committed state
         mid-epoch). Default: the latest published manifest.
-
-        ``buckets`` (from :meth:`bucket_ids`) prunes BUCKETED groups to
-        those part-files — the probe path: only the buckets the probe
-        keys hash into are scanned. Unbucketed groups are always read
-        whole (a superset — sound for the equi-join consumers pruning
-        is restricted to). Not supported for keyed tables (latest-per-
-        key must see every version).
 
         For a KEYED table, group pruning happens after latest-per-key
         resolution (as a row filter), never before: a pruned group
@@ -251,23 +193,7 @@ class ParquetStateStore:
         groups = self.table_groups(name, None if keys else min_slot, manifest)
         if not groups:
             return None
-        if keys and buckets is not None:
-            raise ValueError("bucket-pruned reads unsupported for keyed tables")
-        paths: list[str] = []
-        for g in groups:
-            full = os.path.join(self.root, g.path)
-            if buckets is not None and g.bucketed:
-                for b in buckets:
-                    paths.extend(
-                        __import__("glob").glob(
-                            os.path.join(full, f"part-{b:05d}-*")
-                        )
-                    )
-            else:
-                paths.append(full)
-        if not paths:
-            # every candidate bucket is empty in every group
-            return None
+        paths = [os.path.join(self.root, g.path) for g in groups]
         reader = spark.read
         known = self._schemas.get(name)
         if known is not None:
@@ -316,12 +242,6 @@ class ParquetStateStore:
         full = os.path.join(self.root, rel)
         with self._inflight_lock:
             self._inflight_groups.add(rel)
-        spec = self._bucketing.get(name)
-        if spec is not None:
-            # bucketed layout overrides epoch width sizing: partition id
-            # == bucket id == part-file number (HashPartitioning pmod)
-            df = df.repartition(spec["n"], *spec["keys"])
-            parts = None
         if parts is not None and parts > 0:
             # Write-width control (driver-sized per epoch, see _flush):
             # ``coalesce`` for small epochs — free, but it PROPAGATES UP
@@ -350,10 +270,7 @@ class ParquetStateStore:
             with self._inflight_lock:
                 self._inflight_groups.discard(rel)
             return None
-        return FileGroup(
-            path=rel, min_slot=lo, max_slot=hi, rows=rows,
-            bucketed=spec is not None,
-        )
+        return FileGroup(path=rel, min_slot=lo, max_slot=hi, rows=rows)
 
     def commit(
         self,
@@ -365,11 +282,9 @@ class ParquetStateStore:
         spark: SparkSession | None = None,
         meta: dict[str, Any] | None = None,
         upserts: dict[str, tuple[DataFrame, list[str], int, int]] | None = None,
-        waves: list[list[str]] | None = None,
         states_fn=None,
         write_parts: int | None = None,
         write_shuffle: bool = False,
-        after=None,
         retract_tables: list[str] | None = None,
     ) -> dict:
         """One atomic transaction: optional slot-range retraction,
@@ -378,8 +293,20 @@ class ParquetStateStore:
 
         ``appends[table] = (df, min_slot, max_slot)`` — the epoch's slot
         range is known to the driver, so no extra jobs to discover it.
-        Data files are written first (invisible), the manifest rename
-        publishes everything at once.
+        Appends are written first, outside ``_publish_lock`` (file-
+        groups stay invisible until the manifest rename, so another
+        root may publish meanwhile). Then, under the lock: read the
+        current manifest, retract, write upserts, run ``states_fn``,
+        assemble and publish — the rename publishes everything at once.
+
+        ALL of a commit's table writes run concurrently regardless of
+        DAG level. Dependents referencing a parent's cached epoch
+        output are safe to write concurrently with the parent — Spark's
+        block manager takes a per-block write lock in getOrElseUpdate,
+        so a cached parent partition is computed exactly once no matter
+        how many concurrent jobs demand it (the rest block until it
+        lands). The epoch critical path is ~max(single write), not
+        Σ(level waves).
 
         ``upserts[table] = (df, keys, lo, hi)`` — B5 keyed MERGE as
         merge-on-read: the new rows are appended stamped with the commit
@@ -388,119 +315,62 @@ class ParquetStateStore:
         strategy), :meth:`compact` bounds read amplification, and slot-
         range retraction automatically *resurrects* the previous version
         of a key (the reference's spent-slot un-update, B7) because the
-        newer version lives in a newer slot range.
-
-        ``waves`` — accepted for API compatibility and ignored: ALL
-        table writes now run in one concurrent pool regardless of DAG
-        level. Dependents referencing a parent's cached epoch output are
-        safe to write concurrently with the parent — Spark's block
-        manager takes a per-block write lock in getOrElseUpdate, so a
-        cached parent partition is computed exactly once no matter how
-        many concurrent jobs demand it (the rest block until it lands).
-        This collapses the epoch critical path from Σ(level waves) to
-        ~max(single write) — the round-1 bench showed the wave barrier
-        was the depth-3 retention killer (0.445: three sequential waves
-        of one table each). Atomicity is unaffected (one manifest
-        rename).
+        newer version lives in a newer slot range. Upserts write under
+        the lock: their version stamp is the manifest id being
+        published.
 
         ``states_fn`` — optional zero-arg callable returning the states
-        dict, invoked AFTER data writes finish (and after ``after``
-        resolves) but BEFORE the manifest is assembled. Lets the driver
-        overlap control-plane work (the tip-points collect) with the
-        epoch's data writes instead of serializing it in front of them.
-
-        ``after`` — optional Future of the PREDECESSOR commit (pipelined
-        epochs, the reference's unified-batch design,
-        docs/design/unified-branch-batch-commit.md:107-114). Append-only
-        commits run their data writes immediately — written file-groups
-        are invisible until the manifest rename, so overlapping the
-        writes of successive epochs is safe — then wait for ``after``
-        and publish under the store's lock, preserving manifest order.
-        If the predecessor failed, this commit raises before publishing
-        (fail-fast A18: its orphaned files are vacuum-able garbage).
-        Retraction/upsert commits serialize entirely (they read manifest
-        state the predecessor may change).
+        dict, invoked after the data writes finish but before the
+        manifest is assembled. Lets the driver overlap control-plane
+        work (the tip-points collect) with the epoch's data writes
+        instead of serializing it in front of them.
         """
-        serial = retract_from is not None or bool(upserts)
-        if serial:
-            if after is not None:
-                after.result()
-            with self._publish_lock:
-                return self._commit_serial(
-                    appends, states, retract_from, spark, meta, upserts,
-                    states_fn, write_parts, write_shuffle, retract_tables,
-                )
-
-        # Append-only pipelined path: write data first (invisible),
-        # then order the publish behind the predecessor.
-        write_tasks = [(n, df, lo, hi) for n, (df, lo, hi) in appends.items()]
-        groups = self._write_groups_parallel(write_tasks, write_parts, write_shuffle)
-        if after is not None:
-            after.result()
+        if states_fn is not None:
+            assert states is None, "pass states OR states_fn, not both"
+        appended = self._write_groups_parallel(
+            [(n, df, lo, hi) for n, (df, lo, hi) in appends.items()],
+            write_parts, write_shuffle,
+        )
         with self._publish_lock:
             manifest = self.current_manifest()
-            tables = {k: list(v) for k, v in manifest["tables"].items()}
-            wrote_data = False
-            for name, group in groups:
+            tables: dict[str, list[dict]] = {
+                k: list(v) for k, v in manifest["tables"].items()
+            }
+            keyed: dict[str, list[str]] = dict(manifest.get("keyed_tables", {}))
+            if retract_from is not None:
+                assert spark is not None, "retraction needs a SparkSession"
+                tables = self._retract_groups(
+                    spark, tables, retract_from,
+                    set(retract_tables) if retract_tables is not None else None,
+                )
+
+            version = manifest["id"] + 1
+            upsert_tasks: list[tuple[str, DataFrame, int, int]] = []
+            for name, (df, keys, lo, hi) in (upserts or {}).items():
+                prev = keyed.get(name)
+                if prev is not None and prev != list(keys):
+                    raise ValueError(
+                        f"upsert keys for {name!r} changed: {prev} -> {list(keys)}"
+                    )
+                keyed[name] = list(keys)
+                from pyspark.sql import functions as F
+
+                upsert_tasks.append(
+                    (name, df.withColumn("_v", F.lit(version)), lo, hi)
+                )
+
+            wrote_data = retract_from is not None
+            for name, group in appended + self._write_groups_parallel(
+                upsert_tasks, write_parts, write_shuffle
+            ):
                 if group is not None:
                     tables.setdefault(name, []).append(group.as_dict())
                     wrote_data = True
+
             if states_fn is not None:
-                assert states is None, "pass states OR states_fn, not both"
                 states = states_fn()
-            new_manifest = self._assemble(
-                manifest, tables, dict(manifest.get("keyed_tables", {})),
-                states, meta,
-            )
+            new_manifest = self._assemble(manifest, tables, keyed, states, meta)
             self._publish(new_manifest)
-        new_manifest["_wrote_data"] = wrote_data
-        return new_manifest
-
-    def _commit_serial(
-        self, appends, states, retract_from, spark, meta, upserts,
-        states_fn, write_parts, write_shuffle=False, retract_tables=None,
-    ) -> dict:
-        manifest = self.current_manifest()
-        tables: dict[str, list[dict]] = {
-            k: list(v) for k, v in manifest["tables"].items()
-        }
-        keyed: dict[str, list[str]] = dict(manifest.get("keyed_tables", {}))
-
-        if retract_from is not None:
-            assert spark is not None, "retraction needs a SparkSession"
-            tables = self._retract_groups(
-                spark, tables, retract_from,
-                set(retract_tables) if retract_tables is not None else None,
-            )
-
-        version = manifest["id"] + 1
-        write_tasks: list[tuple[str, DataFrame, int, int]] = []
-        for name, (df, lo, hi) in appends.items():
-            write_tasks.append((name, df, lo, hi))
-        for name, (df, keys, lo, hi) in (upserts or {}).items():
-            prev = keyed.get(name)
-            if prev is not None and prev != list(keys):
-                raise ValueError(
-                    f"upsert keys for {name!r} changed: {prev} -> {list(keys)}"
-                )
-            keyed[name] = list(keys)
-            from pyspark.sql import functions as F
-
-            write_tasks.append((name, df.withColumn("_v", F.lit(version)), lo, hi))
-
-        wrote_data = retract_from is not None
-        for name, group in self._write_groups_parallel(
-            write_tasks, write_parts, write_shuffle
-        ):
-            if group is not None:
-                tables.setdefault(name, []).append(group.as_dict())
-                wrote_data = True
-
-        if states_fn is not None:
-            assert states is None, "pass states OR states_fn, not both"
-            states = states_fn()
-        new_manifest = self._assemble(manifest, tables, keyed, states, meta)
-        self._publish(new_manifest)
         new_manifest["_wrote_data"] = wrote_data
         return new_manifest
 
@@ -556,7 +426,6 @@ class ParquetStateStore:
             "ts": time.time(),
             "tables": tables,
             "keyed_tables": keyed,
-            "bucketed_tables": dict(self._bucketing),
             "reducer_states": new_states,
             "meta": meta or {},
         }
@@ -629,46 +498,46 @@ class ParquetStateStore:
         not whole-table."""
         from pyspark.sql import functions as F
 
-        manifest = self.current_manifest()
-        version = manifest["id"] + 1
-        groups = self.table_groups(name)
-        if upto_slot is not None:
-            frozen = [g for g in groups if g.max_slot <= upto_slot]
-            live = [g for g in groups if g.max_slot > upto_slot]
-            if len(frozen) < 2:
-                return manifest
-            raw = spark.read.parquet(
-                *[os.path.join(self.root, g.path) for g in frozen]
+        # the whole read→write→publish runs under the publish lock: the
+        # merged group replaces groups chosen from THIS manifest, so a
+        # concurrent commit must not publish between the read and the
+        # rename
+        with self._publish_lock:
+            manifest = self.current_manifest()
+            version = manifest["id"] + 1
+            groups = self.table_groups(name, manifest=manifest)
+            if upto_slot is not None:
+                frozen = [g for g in groups if g.max_slot <= upto_slot]
+                live = [g for g in groups if g.max_slot > upto_slot]
+                if len(frozen) < 2:
+                    return manifest
+                raw = spark.read.parquet(
+                    *[os.path.join(self.root, g.path) for g in frozen]
+                )
+                lo = min(g.min_slot for g in frozen)
+                hi = max(g.max_slot for g in frozen)
+                group = self._write_group(name, raw, lo, hi)
+                merged = ([group.as_dict()] if group else []) + [
+                    g.as_dict() for g in live
+                ]
+            else:
+                if not groups:
+                    return manifest
+                resolved = self.read_table(spark, name, manifest=manifest)
+                keys = manifest.get("keyed_tables", {}).get(name)
+                if keys:
+                    resolved = resolved.withColumn("_v", F.lit(version))
+                lo = min(g.min_slot for g in groups)
+                hi = max(g.max_slot for g in groups)
+                group = self._write_group(name, resolved, lo, hi)
+                merged = [group.as_dict()] if group else []
+            tables = {k: list(v) for k, v in manifest["tables"].items()}
+            tables[name] = merged
+            new_manifest = self._assemble(
+                manifest, tables, dict(manifest.get("keyed_tables", {})), None,
+                {"compacted": name, "upto_slot": upto_slot},
             )
-            lo = min(g.min_slot for g in frozen)
-            hi = max(g.max_slot for g in frozen)
-            group = self._write_group(name, raw, lo, hi)
-            merged = ([group.as_dict()] if group else []) + [
-                g.as_dict() for g in live
-            ]
-        else:
-            if not groups:
-                return manifest
-            resolved = self.read_table(spark, name)
-            keys = manifest.get("keyed_tables", {}).get(name)
-            if keys:
-                resolved = resolved.withColumn("_v", F.lit(version))
-            lo = min(g.min_slot for g in groups)
-            hi = max(g.max_slot for g in groups)
-            group = self._write_group(name, resolved, lo, hi)
-            merged = [group.as_dict()] if group else []
-        tables = {k: list(v) for k, v in manifest["tables"].items()}
-        tables[name] = merged
-        new_manifest = {
-            "id": version,
-            "ts": time.time(),
-            "tables": tables,
-            "keyed_tables": dict(manifest.get("keyed_tables", {})),
-            "bucketed_tables": dict(self._bucketing),
-            "reducer_states": dict(manifest["reducer_states"]),
-            "meta": {"compacted": name, "upto_slot": upto_slot},
-        }
-        self._publish(new_manifest)
+            self._publish(new_manifest)
         return new_manifest
 
     def fsck(self, spark: SparkSession | None = None) -> dict:

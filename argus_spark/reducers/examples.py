@@ -99,13 +99,8 @@ def make_utxo_reducer(watched: DataFrame):
         # spends resolve correctly). The epoch's inputs are small →
         # broadcast them and probe the big UTxO side, never the reverse
         # (no Exchange on the committed side). An old UTxO is always
-        # spendable, so slot pruning can't help the probe; the scale
-        # lever is LAYOUT: when the store declares wallet_utxos
-        # bucketed by tx_hash (store.set_bucketing), the probe below
-        # prunes the committed scan to the buckets this epoch's inputs
-        # hash into — sound because the consumer is exactly the
-        # equi-join on tx_hash. Unbucketed stores read the whole table
-        # (probe is a no-op).
+        # spendable, so slot pruning can't help the probe: it reads the
+        # whole committed table.
         inputs_df = ctx.spark.sql(
             f"""
             SELECT inp.tx_id AS tx_id, inp.index AS index,
@@ -116,10 +111,7 @@ def make_utxo_reducer(watched: DataFrame):
             """
         )
         iv = ctx.register_view("epoch_inputs", inputs_df)
-        committed_view = ctx.table_view(
-            "wallet_utxos",
-            probe=(inputs_df.selectExpr("tx_id AS tx_hash"), ["tx_hash"]),
-        )
+        committed_view = ctx.table_view("wallet_utxos")
         known = (
             f"(SELECT * FROM {committed_view}"
             f" UNION ALL SELECT * FROM {created_view})"
@@ -163,10 +155,8 @@ def make_balance_reducer(watched: DataFrame):
 
     def _apply(ctx) -> dict[str, DataFrame]:
         hi = ctx.epoch_range[1]
-        # control-plane: previous snapshot slot — table_tip, NOT the
-        # committed manifest: under pipelined commits the previous
-        # epoch's snapshot may still be in flight (visible only via
-        # ctx.table's pending union)
+        # control-plane: previous snapshot slot, from the epoch's
+        # pinned manifest
         prev_slot = ctx.table_tip("watched_address_balances")
         created_view = ctx.table_view("wallet_utxos", min_slot=prev_slot + 1)
         if created_view is None:

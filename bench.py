@@ -495,10 +495,7 @@ def main() -> None:
         watched = synth_watched(spark, SF_DIR).cache()
         watched.count()
 
-        def lc_run(
-            n_lc: int, batch: int, tag: str, registry_fn=None,
-            bucketed: bool = False,
-        ) -> float:
+        def lc_run(n_lc: int, batch: int, tag: str, registry_fn=None) -> float:
             # slot-threshold filter over the range-partitioned ingest
             # table — per-epoch slot predicates prune at the file level
             lc_blocks = first_n_blocks(spark, SF_DIR, n_lc)
@@ -512,11 +509,6 @@ def main() -> None:
             # shared-host VMs, so 2 post-warm samples were not enough
             for i in range(4):
                 store = ParquetStateStore(os.path.join(td, f"store_{tag}_{i}"))
-                if bucketed:
-                    # the 100 TB layout (scripts/example_indexer.py
-                    # runs it too): spend probes prune to candidate
-                    # buckets instead of scanning the whole UTxO set
-                    store.set_bucketing("wallet_utxos", ["tx_hash"], 16)
                 reg = (
                     registry_fn()
                     if registry_fn
@@ -541,18 +533,7 @@ def main() -> None:
         # knee is bigger micro-batches (per-epoch job overhead amortizes
         # where Postgres amortized fsyncs): report the same batch-500
         # point for comparability plus the knee throughput.
-        # batch-500 flat (the reference-comparable headline) PLUS the
-        # bucketed layout as a labeled secondary. Measured honestly:
-        # at this scale bucketing COSTS ~15-20% (each wallet_utxos
-        # write pays a repartition(16), and a 500-key spend probe
-        # covers all 16 buckets, so pruning never fires). The layout
-        # pays off when n_buckets ≫ probe cardinality and committed
-        # data ≫ one epoch — i.e. the 100 TB regime, where the probe
-        # reads ≤|probe|/n_buckets of the UTxO set instead of all of
-        # it. The pruned read path itself is plan-gated for
-        # correctness in tests/test_lifecycle_e2e.py.
         lifecycle_bps_500 = lc_run(2000, 500, "b500")
-        lifecycle_bps_500_bucketed = lc_run(2000, 500, "b500bkt", bucketed=True)
         lifecycle_bps = lc_run(20000, 20000, "knee")
 
         # Depth (in)dependence — the reference's sequential cascade
@@ -630,8 +611,6 @@ def main() -> None:
         bps_vals = {
             "blocks_per_sec_utxo_graph": blocks_per_sec,
             "blocks_per_sec_lifecycle_batch500": lifecycle_bps_500,
-            "blocks_per_sec_lifecycle_batch500_bucketed":
-                lifecycle_bps_500_bucketed,
             "blocks_per_sec_lifecycle": lifecycle_bps,
             "blocks_per_sec_depth1_chain": depth1_bps,
             "blocks_per_sec_depth3_chain": depth3_bps,
@@ -649,8 +628,6 @@ def main() -> None:
             "blocks_per_sec_utxo_graph": _utxo_graph_rerun,
             "blocks_per_sec_lifecycle_batch500":
                 lambda: lc_run(2000, 500, "b500r"),
-            "blocks_per_sec_lifecycle_batch500_bucketed":
-                lambda: lc_run(2000, 500, "b500bktr", bucketed=True),
             "blocks_per_sec_lifecycle": lambda: lc_run(20000, 20000, "kneer"),
             "blocks_per_sec_depth1_chain":
                 lambda: lc_run(10000, 10000, "d1r",
@@ -700,12 +677,10 @@ def main() -> None:
             if clean_bps > bps_vals[key]:
                 bps_vals[key] = clean_bps
             lifecycle_reruns[key] = rec
-        (blocks_per_sec, lifecycle_bps_500, lifecycle_bps_500_bucketed,
-         lifecycle_bps, depth1_bps, depth3_bps, streaming_bps,
-         streaming_tip_bps) = (
+        (blocks_per_sec, lifecycle_bps_500, lifecycle_bps, depth1_bps,
+         depth3_bps, streaming_bps, streaming_tip_bps) = (
             bps_vals["blocks_per_sec_utxo_graph"],
             bps_vals["blocks_per_sec_lifecycle_batch500"],
-            bps_vals["blocks_per_sec_lifecycle_batch500_bucketed"],
             bps_vals["blocks_per_sec_lifecycle"],
             bps_vals["blocks_per_sec_depth1_chain"],
             bps_vals["blocks_per_sec_depth3_chain"],
@@ -746,41 +721,6 @@ def main() -> None:
             depth1_bps = max(depth1_bps, d1c)
             depth3_bps = max(depth3_bps, d3c)
             lifecycle_reruns["depth3_retention"] = rec
-
-        # The point where the bucketed layout WINS: a narrow spend/
-        # serving probe against a large committed UTxO set. The epoch
-        # write-side cost shows up in the batch-500 bucketed row; this
-        # is the read-side payoff — a 1-key probe reads 1/16 of the
-        # committed files instead of all of them. At 100 TB this is the
-        # whole game: probe cost scales with |probe|/n_buckets, not
-        # with table size.
-        store_p = ParquetStateStore(os.path.join(td, "store_probe"))
-        store_p.set_bucketing("wallet_utxos", ["tx_hash"], 16)
-        pr_blocks = first_n_blocks(spark, SF_DIR, 20000)
-        pr_slots = [
-            r.slot for r in pr_blocks.select("slot").orderBy("slot").collect()
-        ]
-        IndexDriver(
-            spark, build_example_registry(spark, watched), store_p, pr_blocks,
-            batch_size=2000, max_delay_s=1e9, max_rollback_slots=10**12,
-        ).run([ChainEvent("roll_forward", block_slot=s) for s in pr_slots])
-        full = store_p.read_table(spark, "wallet_utxos")
-        a_hash = full.select("tx_hash").first()[0]
-        probe_df = spark.createDataFrame([(a_hash,)], "tx_hash string")
-        buckets = store_p.bucket_ids(spark, "wallet_utxos", probe_df)
-        pruned = store_p.read_table(spark, "wallet_utxos", buckets=buckets)
-
-        def probe_ms(df) -> float:
-            runs = []
-            for i in range(4):  # run 0 warms
-                t0 = time.perf_counter()
-                df.filter(df.tx_hash == a_hash).count()
-                if i > 0:
-                    runs.append(time.perf_counter() - t0)
-            return round(sorted(runs)[1] * 1000, 1)  # median of 3
-
-        probe_full_ms = probe_ms(full)
-        probe_bucketed_ms = probe_ms(pruned)
 
         # Incremental-delta stored-index probe (r11 verdict #3): the
         # same daily-shard candidate query via (a) the recompute path
@@ -857,12 +797,9 @@ def main() -> None:
         "blocks_per_sec_utxo_graph": blocks_per_sec,
         "blocks_per_sec_lifecycle": lifecycle_bps,
         "blocks_per_sec_lifecycle_batch500": lifecycle_bps_500,
-        "blocks_per_sec_lifecycle_batch500_bucketed": lifecycle_bps_500_bucketed,
         "blocks_per_sec_streaming": streaming_bps,
         "blocks_per_sec_streaming_tip": streaming_tip_bps,
         "streaming_tip_micro_batches": stream_batches,
-        "utxo_point_probe_ms_full_scan": probe_full_ms,
-        "utxo_point_probe_ms_bucket_pruned": probe_bucketed_ms,
         "delta_probe_ms_recompute": delta_recompute_ms,
         "delta_probe_ms_stored_index": delta_stored_ms,
         "emb_delta_probe_ms_recompute": emb_delta_recompute_ms,
@@ -877,14 +814,13 @@ def main() -> None:
         # by the LIFECYCLE-SECTION probe ratio (taken at the section
         # boundary, minutes after cal_start — within-session drift is
         # exactly what the r13 forensics measured), not the sweep-start
-        # one. Abbrevs: utxo graph / batch-500 (+bucketed) / knee /
+        # one. Abbrevs: utxo graph / batch-500 / knee /
         # depth-1 / depth-3 / streaming catch-up / streaming tip.
         "bps_norm": {
             k: _norm_bps(v, host_ratio_lc)
             for k, v in (
                 ("utxo", blocks_per_sec),
                 ("b500", lifecycle_bps_500),
-                ("b500b", lifecycle_bps_500_bucketed),
                 ("knee", lifecycle_bps),
                 ("d1", depth1_bps),
                 ("d3", depth3_bps),
@@ -951,8 +887,6 @@ def main() -> None:
         # lifecycle/streaming rows).
         for k in (
             "streaming_tip_micro_batches",
-            "utxo_point_probe_ms_full_scan",
-            "utxo_point_probe_ms_bucket_pruned",
             "delta_probe_ms_recompute",
             "delta_probe_ms_stored_index",
             "emb_delta_probe_ms_recompute",

@@ -5,12 +5,11 @@ bounded live-smoke monitor with CI exit codes, Example/README.md:40-75).
 End to end: build the 4-reducer example DAG (blocks, transactions,
 UTxO ledger, incremental balance snapshots) → feed it a synthetic
 ordered chain with one scripted mid-stream reorg → commit epochs
-atomically into a ParquetStateStore (hash-bucketed UTxO layout, the
-100 TB spend-probe path) → print the telemetry dashboard (per-reducer
-progress bars, the reference's TUI shape) and the serving view (latest
-balance per watched address) → run the smoke monitor's post-hoc
-progress assertion, vacuum retraction leftovers, and gate the exit
-code on fsck.
+atomically into a ParquetStateStore → print the telemetry dashboard
+(per-reducer progress bars, the reference's TUI shape) and the serving
+view (latest balance per watched address) → run the smoke monitor's
+post-hoc progress assertion, vacuum retraction leftovers, and gate the
+exit code on fsck.
 
 Exit sequence mirrors the reference's LiveSmokeMonitor contract and
 extends it: smoke (per-reducer progress) → vacuum (sweep groups the
@@ -72,11 +71,6 @@ def main() -> int:
 
         telemetry = Telemetry()
         store = ParquetStateStore(os.path.join(td, "store"))
-        # The 100 TB layout, on by default in the runnable path: the
-        # UTxO set persists hash-bucketed by tx_hash so the per-epoch
-        # spend probe prunes its committed scan to candidate buckets
-        # (the reference's secondary-index role, TestDbContext.cs:35-37).
-        store.set_bucketing("wallet_utxos", ["tx_hash"], 16)
         registry = build_example_registry(spark, watched)
         # Driver knobs come from an appsettings-shaped config — the
         # reference's exact key paths (lifecycle/config.py): a user's

@@ -78,7 +78,6 @@ def test_forward_sync_matches_oracle(spark, chain, tmp_path):
         spark, build_example_registry(spark, watched), store, blocks,
         batch_size=400, max_delay_s=1e9,
     )
-    assert d.pipeline_depth == 1  # no snapshot reads -> synchronous tx
     stats = d.run(fwd(slots))
     assert stats.blocks == len(slots)
     assert driver_balances(spark, store) == expected_balances(spark)

@@ -75,18 +75,11 @@ def driver_balances(spark, store):
     return {r["address_name"]: r["balance"] for r in df.collect()}
 
 
-@pytest.mark.parametrize("depth", [1, 2])
-def test_forward_sync_matches_oracle(spark, chain, tmp_path, depth):
-    # depth=2 exercises PIPELINED commits (unified-batch overlap):
-    # in-flight pending visibility, frozen-manifest snapshots, ordered
-    # publish — the non-default path must stay oracle-exact
+def test_forward_sync_matches_oracle(spark, chain, tmp_path):
     blocks, watched, slots = chain
     store = ParquetStateStore(str(tmp_path / "store"))
     reg = build_example_registry(spark, watched)
-    d = IndexDriver(
-        spark, reg, store, blocks, batch_size=400, max_delay_s=1e9,
-        pipeline_depth=depth,
-    )
+    d = IndexDriver(spark, reg, store, blocks, batch_size=400, max_delay_s=1e9)
     stats = d.run(fwd(slots))
     assert stats.blocks == len(slots)
     assert stats.epochs >= len(slots) // 400
@@ -163,28 +156,20 @@ def test_crash_recovery_resume(spark, chain, tmp_path):
     )
 
 
-@pytest.mark.parametrize("depth", [1, 2])
-def test_deep_rollback_then_fresh_driver_no_duplicates(spark, chain, tmp_path, depth):
+def test_deep_rollback_then_fresh_driver_no_duplicates(spark, chain, tmp_path):
     """Regression: a rollback deeper than the checkpoint window empties
     the window, but the persisted resume cursor still marks the exact
     committed floor — a fresh driver must NOT re-apply (and duplicate)
-    blocks below the fork. depth=2 additionally covers rollback
-    draining the pipelined in-flight commits first."""
+    blocks below the fork."""
     blocks, watched, slots = chain
     store = ParquetStateStore(str(tmp_path / "store"))
     reg = build_example_registry(spark, watched)
-    d = IndexDriver(
-        spark, reg, store, blocks, batch_size=500, max_delay_s=1e9,
-        pipeline_depth=depth,
-    )
+    d = IndexDriver(spark, reg, store, blocks, batch_size=500, max_delay_s=1e9)
     d.run(fwd(slots))
     fork_slot = slots[len(slots) // 2]  # far deeper than the 10-point window
     d.run([ChainEvent("roll_back", rollback_slot=fork_slot, rollback_type="exclusive")])
 
-    d2 = IndexDriver(
-        spark, reg, store, blocks, batch_size=500, max_delay_s=1e9,
-        pipeline_depth=depth,
-    )
+    d2 = IndexDriver(spark, reg, store, blocks, batch_size=500, max_delay_s=1e9)
     stats = d2.run(fwd(slots))  # full at-least-once replay from genesis
     assert stats.skipped > 0
     assert driver_balances(spark, store) == expected_balances(spark)
@@ -302,88 +287,6 @@ def test_empty_epoch_defers_commit(spark, chain, tmp_path):
     # checkpoint still advanced to the tip of what was fed
     states = store.reducer_states()
     assert states["noop"].window()[0].slot == slots[199]
-
-
-def test_bucketed_lifecycle_spend_probe(spark, chain, tmp_path):
-    """VERDICT r2 item 7: wallet_utxos persisted hash-bucketed by
-    tx_hash; the spend probe prunes the committed scan to the buckets
-    the epoch's inputs hash into, and the probe join keeps ZERO
-    Exchange on the committed side at batch-500. Results must equal the
-    unbucketed oracle (layout is semantics-neutral)."""
-    from argus_spark.plans.checks import formatted_plan, n_shuffle_exchanges
-
-    blocks, watched, slots = chain
-    store = ParquetStateStore(str(tmp_path / "store"))
-    store.set_bucketing("wallet_utxos", ["tx_hash"], 16)
-    d = IndexDriver(
-        spark, build_example_registry(spark, watched), store, blocks,
-        batch_size=500, max_delay_s=1e9,
-    )
-    d.run(fwd(slots))
-    # correctness with bucketed layout + per-epoch bucket-pruned probes
-    assert driver_balances(spark, store) == expected_balances(spark)
-    groups = store.table_groups("wallet_utxos")
-    assert groups and all(g.bucketed for g in groups)
-
-    # restart persistence: a fresh store instance re-learns the spec
-    store2 = ParquetStateStore(str(tmp_path / "store"))
-    assert store2._bucketing["wallet_utxos"] == {"keys": ["tx_hash"], "n": 16}
-
-    # bucket-pruned probe: one tx_hash → one bucket → ~1/16 of files,
-    # and every row for that key is in the pruned read (no recall loss)
-    full = store.read_table(spark, "wallet_utxos")
-    a_hash = full.select("tx_hash").first()[0]
-    probe = spark.createDataFrame([(a_hash,)], "tx_hash string")
-    buckets = store.bucket_ids(spark, "wallet_utxos", probe)
-    assert buckets is not None and len(buckets) == 1
-    pruned = store.read_table(spark, "wallet_utxos", buckets=buckets)
-    assert len(pruned.inputFiles()) < len(full.inputFiles())
-    want = full.filter(F.col("tx_hash") == a_hash).count()
-    assert pruned.filter(F.col("tx_hash") == a_hash).count() == want
-
-    # plan gate (the batch-500 spend-join shape): broadcast probe into
-    # the pruned committed side — no shuffle Exchange anywhere
-    j = pruned.join(F.broadcast(probe), "tx_hash", "left_semi")
-    plan = formatted_plan(j)
-    assert n_shuffle_exchanges(plan) == 0, plan
-    assert "BroadcastHashJoin" in plan, plan
-
-    # frozen-zone compaction preserves bucket identity and probe results
-    store.compact(spark, "wallet_utxos", upto_slot=max(slots) + 1)
-    groups2 = store.table_groups("wallet_utxos")
-    assert all(g.bucketed for g in groups2)
-    pruned2 = store.read_table(spark, "wallet_utxos", buckets=buckets)
-    assert pruned2.filter(F.col("tx_hash") == a_hash).count() == want
-
-
-def test_example_dag_spend_probe_prunes_at_batch500(spark, chain, tmp_path):
-    """VERDICT r3 item 3: with the bucketed layout on (as the runnable
-    example/bench paths now set it), the example DAG's spend probe must
-    go through the bucket-pruned committed read — every probed
-    wallet_utxos read carries an explicit bucket list (never a full
-    unpruned committed scan) — and results must equal the unbucketed
-    oracle. Selectivity itself (len(buckets) ≪ n when the probe is
-    narrow) is pinned by test_bucketed_lifecycle_spend_probe; this
-    gate pins that the DRIVER PATH engages pruning at batch-500."""
-    blocks, watched, slots = chain
-    probed_reads: list[list[int] | None] = []
-
-    class SpyStore(ParquetStateStore):
-        def read_table(self, spark_, name, min_slot=None, **kw):
-            if name == "wallet_utxos" and kw.get("buckets") is not None:
-                probed_reads.append(kw["buckets"])
-            return super().read_table(spark_, name, min_slot, **kw)
-
-    store = SpyStore(str(tmp_path / "store"))
-    store.set_bucketing("wallet_utxos", ["tx_hash"], 16)
-    d = IndexDriver(
-        spark, build_example_registry(spark, watched), store, blocks,
-        batch_size=500, max_delay_s=1e9,
-    )
-    d.run(fwd(slots))
-    assert driver_balances(spark, store) == expected_balances(spark)
-    assert probed_reads, "spend probe never hit the bucket-pruned read path"
-    assert all(isinstance(b, list) and b for b in probed_reads)
 
 
 def test_auto_compaction_preserves_results_and_bounds_groups(spark, chain, tmp_path):
