@@ -7,8 +7,7 @@ A reducer is a named transform applied per epoch:
 Every appended row MUST carry a ``slot`` column — the universal
 rollback key (src/Argus.Sync/Data/Models/IReducerModel.cs:8-11).
 Retraction is automatic: the engine deletes ``slot >= X`` from every
-table the reducer owns (plus custom ``retract`` hooks for anything
-beyond the slot convention).
+table the reducer owns.
 
 Dependencies form a single-parent DAG (DependsOnAttribute.cs:8); roots
 get their own processing chain; children run after parents within the
@@ -50,8 +49,6 @@ class Reducer:
     # commit).
     depends_on: str | None = None
     tables: list[str] = field(default_factory=list)  # owned output tables
-    # optional custom retraction: (store, delete_from_slot) -> None
-    retract: Callable | None = None
 
 
 class ReducerRegistry:

@@ -12,8 +12,12 @@ Commit triggers (A9, ReducerGraphProcessor.cs:166-173):
   * age > ``max_delay_s`` (default 1.0)
   * drain (end of feed / rollback arriving)
 
-Empty epochs defer their commit (A10): checkpoint advance piggybacks
-on the next data-bearing commit, so quiet periods cost zero fsyncs.
+Empty epochs (A10): an epoch whose reducers output no rows writes no
+file-group, but it still publishes one manifest carrying its
+checkpoint advance, so a quiet period costs one fsync'd manifest per
+epoch. Argus defers such commits to the next data-bearing one
+(IBlockUnitOfWork.cs:70-80); here deferring saved nothing, because a
+deferred checkpoint had to be republished by a commit at run end.
 
 Rollback (A12): commit the open batch first (pre-fork blocks are
 valid), then one atomic retraction commit — every table loses
@@ -277,7 +281,6 @@ class IndexDriver:
             sanitized[s] = r.name
         # in-memory checkpoint windows, loaded from the committed manifest
         self._windows: dict[str, list[Point]] = {}
-        self._deferred_states = False  # A10: windows advanced but not persisted
         self._resume: dict[str, int] = {}
         # pools created lazily at first flush (tests build many drivers
         # that never run); threads are reaped by executor atexit
@@ -342,17 +345,20 @@ class IndexDriver:
         """Process an iterable of ChainEvent (or chain_events rows) in
         order. Returns stats. Restartable: committed state resumes.
 
-        AQE is disabled for the duration of the run: concurrent table
-        write jobs racing to first-materialize a shared cached plan
-        under AQE can transiently evaluate EMPTY (observed ~1/10 deep-
-        rollback e2e runs: a 2,077-row cached output wrote 0 rows while
-        an immediate recount returned 2,077; 0/10 with AQE off).
-        Lifecycle epoch plans are small and explicitly sized
-        (write_parts), so AQE buys nothing here; analytics queries on
-        the same session keep it. The toggle is REFCOUNTED so
-        concurrent per-root drivers (MultiRootDriver) on one session
-        don't re-enable AQE under each other — the conf restores when
-        the last running driver exits."""
+        AQE is disabled for the duration of the run because the epoch
+        plans run faster without it: they are small and explicitly
+        sized (write_parts), so AQE's re-planning only adds work. In
+        perfbench on a 4-core host, a build that left AQE on lost
+        backfill ``ops_per_s`` in 6 of 6 paired seeds (change/parent
+        ratios 0.63 to 0.95, median 0.85) and raised
+        ``op_latency_p50_ms`` (median ratio 1.17).
+
+        The toggle is session-wide: while any run is in progress, every
+        query on the session plans without AQE, including readers such
+        as perfbench's ``tip_serve`` reader and analytics queries. It
+        is REFCOUNTED so concurrent per-root drivers (MultiRootDriver)
+        on one session don't re-enable AQE under each other — the conf
+        restores when the last running driver exits."""
         _aqe_acquire(self.spark)
         try:
             return self._run(events)
@@ -394,8 +400,6 @@ class IndexDriver:
                 raise ValueError(f"unknown action {ev.action!r}")
         if pending:  # drain trigger (at tip / end of feed)
             self._flush(pending)
-        if self._deferred_states:  # persist windows deferred by empty epochs
-            self._commit_states_only()
         self.stats.wall_seconds = time.monotonic() - t0
         return self.stats
 
@@ -534,7 +538,7 @@ class IndexDriver:
             natural = max(1, n_blocks // 250)
             manifest = self.store.commit(
                 appends=appends,
-                states_fn=_states,
+                states=_states,
                 meta={"epoch": [lo, hi], "n_blocks": n_blocks},
                 write_parts=min(natural, width_cap),
                 write_shuffle=natural > width_cap,
@@ -544,9 +548,6 @@ class IndexDriver:
                 df.unpersist()
             if blocks_cached:
                 blocks.unpersist()
-        # A10 — a commit that wrote no data still published (cheap local
-        # JSON); defer-if-empty is tracked for parity
-        self._deferred_states = not manifest.get("_wrote_data", True)
         if self.telemetry is not None:
             self.telemetry.record_epoch(manifest["id"], lo, hi, n_blocks, epoch_times)
         self.stats.blocks += n_blocks
@@ -565,10 +566,21 @@ class IndexDriver:
         horizon = tip - self.max_rollback_slots
         if horizon <= 0:
             return
-        for tbl in list(self.store.current_manifest()["tables"]):
+        for tbl in self._owned_tables():
             if len(self.store.table_groups(tbl)) >= self.compact_min_groups:
                 self.store.compact(self.spark, tbl, upto_slot=horizon)
         self.store.vacuum()
+
+    def _owned_tables(self) -> list[str]:
+        """The tables this driver retracts and compacts: its reducers'
+        declared tables, or every table in the store when some reducer
+        declares none. Per-root processors share a store but roll back
+        and compact independently (the reference runs one chain
+        connection per root subgraph), so a driver whose reducers all
+        declare ownership never touches another root's tables."""
+        if all(r.tables for r in self._order):
+            return [t for r in self._order for t in r.tables]
+        return list(self.store.current_manifest()["tables"])
 
     def _state_rows(self) -> dict[str, ReducerStateRow]:
         existing = self.store.reducer_states()
@@ -583,10 +595,6 @@ class IndexDriver:
                 resume_slot=self._resume[r.name],
             )
         return out
-
-    def _commit_states_only(self) -> None:
-        self.store.commit(appends={}, states=self._state_rows(), meta={"ckpt": True})
-        self._deferred_states = False
 
     # ---------------- rollback (A5, A12, A16, A17) ----------------
 
@@ -611,9 +619,8 @@ class IndexDriver:
         exclude: list[str] | None = None,
     ) -> None:
         """A17 operator rewind / A12 reorg retraction: one atomic commit
-        deleting ``slot >= delete_from`` everywhere + rewound windows.
-        Custom per-reducer retract hooks run first (for tables outside
-        the slot convention).
+        deleting ``slot >= delete_from`` from every table this driver
+        owns (see :meth:`_owned_tables`) + rewound windows.
 
         ``overrides`` / ``exclude`` are the reference's rollback-mode
         per-reducer controls (CardanoIndexWorker.cs:181-202, 256-261):
@@ -627,7 +634,8 @@ class IndexDriver:
         filter in _flush) — the same mechanics as dependent start-point
         adjustment. Requires declared table ownership when overrides or
         exclusions are used (tables of excluded reducers must be
-        distinguishable from the rest)."""
+        distinguishable from the rest). The spec is checked before any
+        window or cursor moves, so a rejected rewind changes nothing."""
         overrides = dict(overrides or {})
         excluded = set(exclude or ())
         known = {r.name for r in self._order}
@@ -636,57 +644,35 @@ class IndexDriver:
             raise ValueError(f"unknown reducers in rewind spec: {sorted(unknown)}")
         if dup := set(overrides) & excluded:
             raise ValueError(f"reducers both overridden and excluded: {sorted(dup)}")
+        if (overrides or excluded) and not all(r.tables for r in self._order):
+            raise ValueError(
+                "per-reducer rewind overrides/exclusions require every "
+                "reducer to declare table ownership"
+            )
         # effective per-reducer cut
         eff = {
             r.name: overrides.get(r.name, delete_from)
             for r in self._order
             if r.name not in excluded
         }
+        if overrides or excluded:
+            cuts = {
+                t: eff[r.name] for r in self._order if r.name in eff for t in r.tables
+            }
+        else:
+            cuts = dict.fromkeys(self._owned_tables(), delete_from)
         for r in self._order:
-            if r.name in excluded:
-                continue
-            if r.retract is not None:
-                r.retract(self.store, eff[r.name])
-        for r in self._order:
-            if r.name in excluded:
+            if r.name not in eff:
                 continue
             cut = eff[r.name]
             self._windows[r.name] = window_roll_back(
                 self._windows[r.name], cut, self.window_k
             )
             self._resume[r.name] = min(self._resume[r.name], cut - 1)
-        # Scope the retraction to THIS graph's tables when every
-        # reducer declares ownership — per-root processors share a
-        # store but roll back independently (the reference runs one
-        # chain connection per root subgraph). A registry with
-        # undeclared tables falls back to store-wide retraction.
-        owned: list[str] | None = []
-        for r in self._order:
-            if not r.tables:
-                owned = None
-                break
-            owned.extend(r.tables)
-        if overrides or excluded:
-            if owned is None:
-                raise ValueError(
-                    "per-reducer rewind overrides/exclusions require every "
-                    "reducer to declare table ownership"
-                )
-            retract_arg: int | dict[str, int] = {
-                t: eff[r.name]
-                for r in self._order
-                if r.name not in excluded
-                for t in r.tables
-            }
-            scope = None  # the map's keys ARE the scope
-        else:
-            retract_arg = delete_from
-            scope = owned
         self.store.commit(
             appends={},
-            states=self._state_rows(),
-            retract_from=retract_arg,
-            retract_tables=scope,
+            states=self._state_rows,
+            retract_from=cuts,
             spark=self.spark,
             meta=meta or {"rollback_to": delete_from},
         )

@@ -53,6 +53,7 @@ import tempfile
 import threading
 import time
 import uuid
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -77,7 +78,7 @@ class DuckDBStateStore:
         # one writer at a time — DuckDB connections are not thread-safe
         # and the single-writer contract (A19) is per-store anyway.
         # REENTRANT: commit() holds it across the transaction and its
-        # states_fn callback reads reducer_states() on the same thread.
+        # ``states`` callback reads reducer_states() on the same thread.
         self._lock = threading.RLock()
         # write-staging batches currently being written by a commit's
         # phase 1 (which runs OUTSIDE self._lock so distributed writes
@@ -265,15 +266,13 @@ class DuckDBStateStore:
     def commit(
         self,
         appends: dict[str, tuple[DataFrame, int, int]],
-        states: dict[str, ReducerStateRow] | None = None,
-        retract_from: int | None = None,
+        states: Callable[[], dict[str, ReducerStateRow]] | None = None,
+        retract_from: dict[str, int] | None = None,
         spark: SparkSession | None = None,
         meta: dict[str, Any] | None = None,
         upserts: dict[str, tuple[DataFrame, list[str], int, int]] | None = None,
-        states_fn=None,
         write_parts: int | None = None,
         write_shuffle: bool = False,
-        retract_tables: list[str] | None = None,
     ) -> dict:
         """One database transaction: retraction + appends + upserts +
         checkpoint rows, all-or-nothing. Spark stages each table's rows
@@ -298,44 +297,20 @@ class DuckDBStateStore:
                 d.write.mode("overwrite").parquet(path)
                 staged[name] = (path, True, list(keys))
             return self._ingest_staged(
-                staged, stage_batch, retract_from, retract_tables,
-                states, states_fn, meta,
+                staged, stage_batch, retract_from, states, meta
             )
         finally:
             with self._stage_lock:
                 self._inflight_stages.discard(stage_batch)
 
-    def _ingest_staged(
-        self, staged, stage_batch, retract_from, retract_tables,
-        states, states_fn, meta,
-    ) -> dict:
-        wrote_data = retract_from is not None
+    def _ingest_staged(self, staged, stage_batch, retract_from, states, meta) -> dict:
         with self._lock:
             catalog = self._tables()
             version = self._version() + 1
             self._con.execute("BEGIN")
             try:
-                if retract_from is not None:
-                    # int = uniform cut scoped by retract_tables;
-                    # dict[table -> slot] = per-table cuts (A17
-                    # per-reducer rewind overrides)
-                    per = (
-                        retract_from
-                        if isinstance(retract_from, dict)
-                        else None
-                    )
-                    scope = (
-                        set(retract_tables) if retract_tables is not None else None
-                    )
-                    for name, keyed in catalog.items():
-                        if per is not None:
-                            if name not in per:
-                                continue
-                            cut = per[name]
-                        else:
-                            if scope is not None and name not in scope:
-                                continue
-                            cut = retract_from
+                for name, cut in (retract_from or {}).items():
+                    if name in catalog:
                         self._con.execute(
                             f"DELETE FROM {_q(name)} WHERE slot >= {int(cut)}"
                         )
@@ -367,14 +342,7 @@ class DuckDBStateStore:
                         catalog[name] = keys if is_upsert else None
                     else:
                         self._con.execute(f"INSERT INTO {_q(name)} {sel}")
-                    n = self._con.execute(
-                        f"SELECT count(*) FROM read_parquet('{glob}')"
-                    ).fetchone()[0]
-                    wrote_data = wrote_data or n > 0
-                if states_fn is not None:
-                    assert states is None, "pass states OR states_fn, not both"
-                    states = states_fn()
-                for name, st in (states or {}).items():
+                for name, st in (states() if states else {}).items():
                     self._con.execute(
                         "INSERT OR REPLACE INTO _reducer_states VALUES (?,?,?,?,?)",
                         [
@@ -395,7 +363,7 @@ class DuckDBStateStore:
                 raise
             finally:
                 shutil.rmtree(stage_batch, ignore_errors=True)
-        return {"id": version, "meta": meta or {}, "_wrote_data": wrote_data}
+        return {"id": version, "meta": meta or {}}
 
     # ---------------- maintenance (db-native no-ops) ----------------
 

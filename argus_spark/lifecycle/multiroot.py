@@ -17,9 +17,11 @@ from properties the store/driver already provide:
     derives resume cursors from ITS OWN reducers' states, so foreign
     subgraphs' commits and states in the shared manifest don't confuse
     it;
-  * rollback retraction is scoped to the subgraph's declared tables
-    (``retract_tables``), so one chain's reorg never deletes a
-    different subgraph's rows — the per-root chain-connection semantics.
+  * rollback retraction and scheduled compaction are scoped to the
+    subgraph's declared tables, so one chain's reorg never deletes a
+    different subgraph's rows, and one root's maintenance never merges
+    (and so never vacuums) groups another root's open epoch still
+    reads — the per-root chain-connection semantics.
 
 Reducer table ownership must be declared (``Reducer.tables``) and
 disjoint across subgraphs — the same invariant the reference imposes by

@@ -36,6 +36,7 @@ import shutil
 import threading
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -255,17 +256,6 @@ class ParquetStateStore:
         self._schemas[name] = df.schema
         rows = pads.dataset(full, format="parquet").count_rows()
         if rows == 0:
-            # Verify-retry: concurrent first-materialization of a shared
-            # cached plan under AQE has been observed to transiently
-            # evaluate empty (see IndexDriver.run, which disables AQE
-            # for exactly this reason). An empty write is always
-            # re-verified with one re-execution before being treated as
-            # a genuinely empty output — cheap for true empties (the
-            # plan IS empty), and it converts a silent lost-epoch into
-            # a correct write for any residual race.
-            df.write.mode("overwrite").parquet(full)
-            rows = pads.dataset(full, format="parquet").count_rows()
-        if rows == 0:
             shutil.rmtree(full, ignore_errors=True)
             with self._inflight_lock:
                 self._inflight_groups.discard(rel)
@@ -275,17 +265,13 @@ class ParquetStateStore:
     def commit(
         self,
         appends: dict[str, tuple[DataFrame, int, int]],
-        states: dict[str, ReducerStateRow] | None = None,
-        # int = uniform slot-range retraction (scoped by retract_tables);
-        # dict[table -> slot] = per-table cuts (A17 rewind overrides)
-        retract_from: int | dict[str, int] | None = None,
+        states: Callable[[], dict[str, ReducerStateRow]] | None = None,
+        retract_from: dict[str, int] | None = None,
         spark: SparkSession | None = None,
         meta: dict[str, Any] | None = None,
         upserts: dict[str, tuple[DataFrame, list[str], int, int]] | None = None,
-        states_fn=None,
         write_parts: int | None = None,
         write_shuffle: bool = False,
-        retract_tables: list[str] | None = None,
     ) -> dict:
         """One atomic transaction: optional slot-range retraction,
         appends + keyed upserts for any number of tables, and
@@ -296,7 +282,7 @@ class ParquetStateStore:
         Appends are written first, outside ``_publish_lock`` (file-
         groups stay invisible until the manifest rename, so another
         root may publish meanwhile). Then, under the lock: read the
-        current manifest, retract, write upserts, run ``states_fn``,
+        current manifest, retract, write upserts, call ``states``,
         assemble and publish — the rename publishes everything at once.
 
         ALL of a commit's table writes run concurrently regardless of
@@ -307,6 +293,10 @@ class ParquetStateStore:
         how many concurrent jobs demand it (the rest block until it
         lands). The epoch critical path is ~max(single write), not
         Σ(level waves).
+
+        ``retract_from[table] = slot`` deletes ``slot >= slot`` from each
+        listed table (A12 reorg retraction, A17 per-reducer rewind
+        overrides); unlisted tables are untouched.
 
         ``upserts[table] = (df, keys, lo, hi)`` — B5 keyed MERGE as
         merge-on-read: the new rows are appended stamped with the commit
@@ -319,14 +309,12 @@ class ParquetStateStore:
         the lock: their version stamp is the manifest id being
         published.
 
-        ``states_fn`` — optional zero-arg callable returning the states
-        dict, invoked after the data writes finish but before the
+        ``states`` — optional zero-arg callable returning the checkpoint
+        rows, called after the data writes finish but before the
         manifest is assembled. Lets the driver overlap control-plane
         work (the tip-points collect) with the epoch's data writes
         instead of serializing it in front of them.
         """
-        if states_fn is not None:
-            assert states is None, "pass states OR states_fn, not both"
         appended = self._write_groups_parallel(
             [(n, df, lo, hi) for n, (df, lo, hi) in appends.items()],
             write_parts, write_shuffle,
@@ -337,12 +325,9 @@ class ParquetStateStore:
                 k: list(v) for k, v in manifest["tables"].items()
             }
             keyed: dict[str, list[str]] = dict(manifest.get("keyed_tables", {}))
-            if retract_from is not None:
+            if retract_from:
                 assert spark is not None, "retraction needs a SparkSession"
-                tables = self._retract_groups(
-                    spark, tables, retract_from,
-                    set(retract_tables) if retract_tables is not None else None,
-                )
+                tables = self._retract_groups(spark, tables, retract_from)
 
             version = manifest["id"] + 1
             upsert_tasks: list[tuple[str, DataFrame, int, int]] = []
@@ -359,19 +344,16 @@ class ParquetStateStore:
                     (name, df.withColumn("_v", F.lit(version)), lo, hi)
                 )
 
-            wrote_data = retract_from is not None
             for name, group in appended + self._write_groups_parallel(
                 upsert_tasks, write_parts, write_shuffle
             ):
                 if group is not None:
                     tables.setdefault(name, []).append(group.as_dict())
-                    wrote_data = True
 
-            if states_fn is not None:
-                states = states_fn()
-            new_manifest = self._assemble(manifest, tables, keyed, states, meta)
+            new_manifest = self._assemble(
+                manifest, tables, keyed, states() if states else None, meta
+            )
             self._publish(new_manifest)
-        new_manifest["_wrote_data"] = wrote_data
         return new_manifest
 
     def _write_groups_parallel(
@@ -434,32 +416,21 @@ class ParquetStateStore:
         self,
         spark: SparkSession,
         tables: dict[str, list[dict]],
-        delete_from: int | dict[str, int],
-        only: set[str] | None = None,
+        cuts: dict[str, int],
     ) -> dict[str, list[dict]]:
-        """B6 as file-group surgery: drop groups fully ≥ delete_from,
-        rewrite straddling groups filtered to ``slot < delete_from``,
-        keep groups fully below untouched. ``only`` scopes the
-        retraction to one graph's tables (per-root processors share a
-        store but roll back independently — the reference's
-        one-chain-connection-per-root shape).
-
-        ``delete_from`` may be a per-table map (A17 per-reducer rewind
-        overrides, CardanoIndexWorker.cs:181-202): each listed table
-        retracts from its own slot; unlisted tables are untouched."""
-        per_table = delete_from if isinstance(delete_from, dict) else None
+        """B6 as file-group surgery on each table in ``cuts``: drop
+        groups fully ≥ its cut, rewrite straddling groups filtered to
+        ``slot < cut``, keep groups fully below untouched. Tables not in
+        ``cuts`` are untouched — per-root processors share a store but
+        roll back independently (the reference's one-chain-connection-
+        per-root shape), and per-reducer rewind overrides
+        (CardanoIndexWorker.cs:181-202) give each table its own cut."""
         out: dict[str, list[dict]] = {}
         for name, groups in tables.items():
-            if per_table is not None:
-                if name not in per_table:
-                    out[name] = list(groups)
-                    continue
-                cut = per_table[name]
-            else:
-                if only is not None and name not in only:
-                    out[name] = list(groups)
-                    continue
-                cut = delete_from
+            if name not in cuts:
+                out[name] = list(groups)
+                continue
+            cut = cuts[name]
             kept: list[dict] = []
             for gd in groups:
                 g = FileGroup.from_dict(gd)

@@ -16,12 +16,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """min(48g, a third of physical memory): a fixed 48g heap let the
+    JVM grow past what a 15 GB host has, and the kernel killed it."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{max(1, min(48, total // 3 // 2**30))}g"
+
+
 def get_spark(app_name: str = "argus_spark", cpus: int | None = None) -> SparkSession:
     """Create (or fetch) the session.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``);
     shuffle partitions track it so local shuffles are neither over- nor
-    under-parallelized.
+    under-parallelized. ``SPARK_GRAFT_DRIVER_MEM`` sets the driver heap
+    (default: min(48g, a third of physical memory)).
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -47,7 +58,10 @@ def get_spark(app_name: str = "argus_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # testdata events.ts is parquet TIMESTAMP(NANOS); read as long and

@@ -122,7 +122,7 @@ def test_keyed_upsert_and_retraction_resurrect(spark, tmp_path):
     store.commit(appends={}, upserts={"kv": (v2, ["k"], 5, 5)})
     got = {r["k"]: r["v"] for r in store.read_table(spark, "kv").collect()}
     assert got == {"k1": 99, "k2": 20}
-    store.commit(appends={}, retract_from=5, spark=spark)
+    store.commit(appends={}, retract_from={"kv": 5}, spark=spark)
     got = {r["k"]: r["v"] for r in store.read_table(spark, "kv").collect()}
     assert got == {"k1": 10, "k2": 20}  # old version resurrected
     store.close()
@@ -171,7 +171,7 @@ def test_crash_before_commit_is_invisible(spark, tmp_path):
     rows = spark.createDataFrame([(1, 100)], "slot long, x int")
     store.commit(
         appends={"t": (rows, 1, 1)},
-        states={"r": ReducerStateRow("r", 0.0, None, [], 1)},
+        states=lambda: {"r": ReducerStateRow("r", 0.0, None, [], 1)},
     )
 
     def boom():
@@ -179,7 +179,7 @@ def test_crash_before_commit_is_invisible(spark, tmp_path):
 
     rows2 = spark.createDataFrame([(2, 200)], "slot long, x int")
     with pytest.raises(RuntimeError, match="crash inside tx"):
-        store.commit(appends={"t": (rows2, 2, 2)}, states_fn=boom)
+        store.commit(appends={"t": (rows2, 2, 2)}, states=boom)
     # neither the data nor any state advanced
     assert store.read_table(spark, "t").count() == 1
     assert store.reducer_states()["r"].resume_slot == 1
@@ -194,7 +194,7 @@ def test_fsck_clean_and_with_injected_anomalies(spark, tmp_path):
     rows = spark.createDataFrame([(1, 100)], "slot long, x int")
     store.commit(
         appends={"t": (rows, 1, 1)},
-        states={"r": ReducerStateRow("r", 0.0, None, [], 1)},
+        states=lambda: {"r": ReducerStateRow("r", 0.0, None, [], 1)},
     )
     store.vacuum()
     rep = store.fsck(spark)

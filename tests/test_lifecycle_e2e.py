@@ -246,13 +246,23 @@ def test_per_reducer_rewind_overrides(spark, chain, tmp_path):
         )
         assert dupes == 0, t
 
-    # undeclared ownership + overrides must be rejected
+    # undeclared ownership + overrides must be rejected, and a rejected
+    # rewind moves no window or cursor: the same feed again is skipped
     reg2 = ReducerRegistry()
     reg2.register(Reducer("loose", _mk("rw_loose")))  # no tables=
     store2 = ParquetStateStore(str(tmp_path / "store2"))
-    d3 = IndexDriver(spark, reg2, store2, blocks, batch_size=1e9)
+    d3 = IndexDriver(
+        spark, reg2, store2, blocks, batch_size=100, max_delay_s=1e9
+    )
+    d3.run(fwd(slots[:200]))
+    floor = d3.graph_resume_slot()
+    assert floor == slots[199]
     with pytest.raises(ValueError, match="table ownership"):
-        d3.rewind_to(10, overrides={"loose": 5})
+        d3.rewind_to(slots[100], overrides={"loose": slots[50]})
+    assert d3.graph_resume_slot() == floor
+    d3.run(fwd(slots[:200]))
+    rows = store2.read_table(spark, "rw_loose")
+    assert rows.count() == rows.select("slot").distinct().count() == 200
 
 
 def test_deep_rollback_guarded(spark, chain, tmp_path):
@@ -270,23 +280,28 @@ def test_deep_rollback_guarded(spark, chain, tmp_path):
         d.run([ChainEvent("roll_back", rollback_slot=0, rollback_type="inclusive")])
 
 
-def test_empty_epoch_defers_commit(spark, chain, tmp_path):
+def test_empty_epoch_advances_checkpoint(spark, chain, tmp_path):
     """A10 — an epoch in which no reducer writes data publishes no data
-    groups; checkpoints still advance (possibly deferred)."""
+    groups; its own manifest still advances the checkpoint, and no
+    extra commit republishes it at the end of the run."""
+    from argus_spark.lifecycle.dag import Reducer, ReducerRegistry
+    from argus_spark.lifecycle.store import MANIFEST_DIR
+
     blocks, watched, slots = chain
     store = ParquetStateStore(str(tmp_path / "store"))
-    from argus_spark.lifecycle.dag import Reducer, ReducerRegistry
-
     reg = ReducerRegistry().register(
         Reducer("noop", lambda ctx: {}, tables=[])
     )
     d = IndexDriver(spark, reg, store, blocks, batch_size=100, max_delay_s=1e9)
-    d.run(fwd(slots[:200]))
+    stats = d.run(fwd(slots[:200]))
     m = store.current_manifest()
     assert m["tables"] == {} or all(not g for g in m["tables"].values())
     # checkpoint still advanced to the tip of what was fed
     states = store.reducer_states()
     assert states["noop"].window()[0].slot == slots[199]
+    # one manifest per epoch
+    manifests = os.listdir(os.path.join(store.root, MANIFEST_DIR))
+    assert len(manifests) == stats.epochs == 2
 
 
 def test_auto_compaction_preserves_results_and_bounds_groups(spark, chain, tmp_path):

@@ -249,7 +249,7 @@ class TestStoreHygiene:
         store = ParquetStateStore(root)
         df = spark.range(10).selectExpr("id AS slot", "CAST(id AS STRING) AS tx_hash")
         m = store.commit(appends={"u": (df, 0, 9)})
-        legacy = {k: v for k, v in m.items() if k != "_wrote_data"}
+        legacy = dict(m)
         legacy["id"] += 1
         legacy["bucketed_tables"] = {"u": {"keys": ["tx_hash"], "n": 16}}
         for g in legacy["tables"]["u"]:

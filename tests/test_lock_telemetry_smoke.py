@@ -219,7 +219,7 @@ def _seed_states(store: ParquetStateStore, slots: dict[str, int]) -> None:
         n: ReducerStateRow(name=n, created_at=0.0, start_point=None, resume_slot=s)
         for n, s in slots.items()
     }
-    store.commit(appends={}, states=states, meta={"seed": True})
+    store.commit(appends={}, states=lambda: states, meta={"seed": True})
 
 
 class TestSmokeMonitor:

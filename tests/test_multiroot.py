@@ -159,6 +159,47 @@ def test_concurrent_sql_view_reducers_no_cross_binding(spark, blocks, tmp_path):
     assert got_b == {(s, "b") for s in slots_b}
 
 
+def test_maintenance_compacts_only_own_tables(spark, blocks, tmp_path):
+    """A root's scheduled compaction touches only its own declared
+    tables: root b's groups, committed by an earlier run, are never
+    merged (or vacuumed) by root a's maintenance on the shared store."""
+    import json
+
+    from argus_spark.lifecycle.store import MANIFEST_DIR
+
+    slots = [r.slot for r in blocks.select("slot").orderBy("slot").collect()]
+    span = slots[-1] - slots[0]
+    store = ParquetStateStore(str(tmp_path / "store"))
+    batch = max(1, len(slots) // 8)
+    MultiRootDriver(
+        spark, _two_root_registry(), store, blocks,
+        batch_size=batch, max_delay_s=1e9,
+    ).run(events_by_root={"a": [], "b": fwd(slots)})
+    b_groups = {t: store.table_groups(t) for t in ("root_b", "root_b_child")}
+    assert all(len(g) >= 2 for g in b_groups.values()), b_groups
+
+    MultiRootDriver(
+        spark, _two_root_registry(), store, blocks,
+        batch_size=batch, max_delay_s=1e9,
+        kwargs_by_root={"a": {
+            "compact_every": 2, "compact_min_groups": 2,
+            "max_rollback_slots": span // 4,
+        }},
+    ).run(events_by_root={"a": fwd(slots), "b": []})
+
+    mdir = os.path.join(store.root, MANIFEST_DIR)
+    compacted = set()
+    for f in os.listdir(mdir):
+        with open(os.path.join(mdir, f)) as fh:
+            compacted.add(json.load(fh)["meta"].get("compacted"))
+    assert "root_a" in compacted
+    assert not compacted & {"root_b", "root_b_child"}, compacted
+    assert {t: store.table_groups(t) for t in b_groups} == b_groups
+    assert store.read_table(spark, "root_b").count() == len(slots)
+    assert store.read_table(spark, "root_b_child").count() == len(slots)
+    assert store.read_table(spark, "root_a").count() == len(slots)
+
+
 def test_undeclared_tables_rejected(spark, blocks):
     reg = ReducerRegistry()
     reg.register(Reducer("x", lambda ctx: {}))  # no declared tables
