@@ -210,10 +210,14 @@ class ReducerContext:
         return view
 
     def table_tip(self, name: str) -> int:
-        """Highest slot any committed data for ``name`` reaches in the
-        epoch's pinned manifest, or -1 when the table has never been
-        written. An output that evaluated empty writes no group, so the
-        tip never overstates past the last slot holding data."""
+        """Highest ``max_slot`` of ``name``'s groups in the epoch's
+        pinned manifest, or -1 when the table has never been written.
+        An appended group records its epoch's slot range and an output
+        that evaluated empty writes no group, so this is the tip of the
+        newest epoch that wrote ``name``; a copy-on-write retraction
+        records the range of the rows it kept. For a table stamped with
+        its epoch's tip, like the balance snapshot, it is therefore the
+        slot of the newest snapshot."""
         return max(
             (
                 g.max_slot

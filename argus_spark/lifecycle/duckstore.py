@@ -37,6 +37,11 @@ ever transits the driver as a Python object:
     export. What it is NOT is an ``.arrow() -> pandas`` driver funnel —
     at 100 TB the committed UTxO set cannot fit the driver.
 
+  * one carve-out: :meth:`read_arrow` fetches a slot-bounded slice with
+    ``.arrow()`` for serving reads whose size the caller bounds (the
+    newest balance snapshot: one row per watched address). It is not a
+    committed-read path for reducers or scans.
+
 No snapshot reads: a live database has one current state, so the
 ``manifest=`` argument of :meth:`read_table` / :meth:`table_groups` is
 accepted and ignored. The driver commits each epoch synchronously before
@@ -260,6 +265,33 @@ class DuckDBStateStore:
         if min_slot is not None:
             df = df.where(f"slot >= {int(min_slot)}")
         return df
+
+    def read_arrow(
+        self,
+        name: str,
+        min_slot: int | None = None,
+        manifest: dict | None = None,
+    ):
+        """In-process read for bounded serving reads (see
+        ``reducers.examples.current_balances``): one ``SELECT ... WHERE
+        slot >= min_slot`` fetched with ``.arrow()``, no Spark job and
+        no export. ``manifest`` is ignored (live state, see the module
+        docstring). Returns None when no row is left. Keyed tables
+        raise ``ValueError``: their latest-per-key resolution is
+        :meth:`read_table`'s."""
+        with self._lock:
+            tables = self._tables()
+            if name not in tables:
+                return None
+            if tables[name]:
+                raise ValueError(
+                    f"{name!r} is a keyed table; read it with read_table"
+                )
+            sql, params = f"SELECT * FROM {_q(name)}", []
+            if min_slot is not None:
+                sql, params = sql + " WHERE slot >= ?", [int(min_slot)]
+            out = self._con.execute(sql, params).arrow()
+        return out if out.num_rows else None
 
     # ---------------- transactional commit (A11) ----------------
 

@@ -14,10 +14,12 @@ commits, rollback retraction, dependent start-point adjustment,
 at-least-once replay absorption).
 
 Both are EAGER by construction (the driver runs while the query is
-built — the streaming-replay precedent); the returned DataFrame is a
-lazy read of the committed store. Chains are capped (L_REORG/L_CRASH
-blocks) to bound driver wall-clock; the caps appear in the oracles as
-``least(count(*), L)`` so both engines cut at the same block.
+built — the streaming-replay precedent); the returned DataFrame is
+the committed serving view (``current_balances`` reads the newest
+balance snapshot in-process while the query is built). Chains are
+capped (L_REORG/L_CRASH blocks) to bound driver wall-clock; the caps
+appear in the oracles as ``least(count(*), L)`` so both engines cut
+at the same block.
 
 Scale note: the scenario schedule is the correctness frame; the 100 TB
 arguments live with the driver itself (per-epoch manifest-pruned
@@ -190,8 +192,8 @@ def lifecycle_reorg_replay_sqltxn(
         )
     finally:
         blocks.unpersist()
-    # the serving frame is a lazy scan of the store's parquet export,
-    # which outlives the connection
+    # the serving frame is a local relation already fetched from the
+    # database, so it outlives the connection
     store.close()
     return out
 

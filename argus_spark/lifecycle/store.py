@@ -40,6 +40,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 
@@ -215,6 +217,40 @@ class ParquetStateStore:
             if min_slot is not None:
                 df = df.filter(F.col("slot") >= min_slot)
         return df
+
+    def read_arrow(
+        self,
+        name: str,
+        min_slot: int | None = None,
+        manifest: dict | None = None,
+    ) -> pa.Table | None:
+        """In-process snapshot read for bounded serving reads (see
+        ``reducers.examples.current_balances``): the file-groups
+        :meth:`read_table` would scan for the same ``min_slot`` and
+        ``manifest``, read by ``pyarrow.dataset`` on the calling thread
+        as one Arrow table, with no Spark job. Returns None when no
+        group is left. Keyed tables raise ``ValueError``: their
+        latest-per-key resolution is :meth:`read_table`'s."""
+        if manifest is None:
+            manifest = self.current_manifest()
+        if name in manifest.get("keyed_tables", {}):
+            raise ValueError(
+                f"{name!r} is a keyed table; read it with read_table"
+            )
+        groups = self.table_groups(name, min_slot, manifest)
+        if not groups:
+            return None
+        # a file list, not the group directories: pyarrow takes a list
+        # of files only, and the files' schemas may differ in
+        # nullability (a copy-on-write rewrite reads back as nullable)
+        files = [
+            f
+            for g in groups
+            for f in pads.dataset(
+                os.path.join(self.root, g.path), format="parquet"
+            ).files
+        ]
+        return pads.dataset(files, format="parquet").to_table()
 
     def reducer_states(self) -> dict[str, ReducerStateRow]:
         out = {}
@@ -445,9 +481,23 @@ class ParquetStateStore:
                 )
                 ng = self._write_group(name, df, g.min_slot, cut - 1)
                 if ng is not None:
+                    # record the range of the rows kept, not [min_slot,
+                    # cut - 1]: a compacted balance group cut between
+                    # two snapshots would otherwise claim a tip no
+                    # snapshot sits at (see ReducerContext.table_tip)
+                    ng.min_slot, ng.max_slot = self._slot_range(ng.path)
                     kept.append(ng.as_dict())
             out[name] = kept
         return out
+
+    def _slot_range(self, rel: str) -> tuple[int, int]:
+        """Lowest and highest ``slot`` in the group at ``rel``, by a
+        one-column read."""
+        slots = pads.dataset(
+            os.path.join(self.root, rel), format="parquet"
+        ).to_table(columns=["slot"])["slot"]
+        mm = pc.min_max(slots)
+        return mm["min"].as_py(), mm["max"].as_py()
 
     def compact(
         self, spark: SparkSession, name: str, upto_slot: int | None = None

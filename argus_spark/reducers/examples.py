@@ -20,6 +20,7 @@ Reducers:
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -288,16 +289,32 @@ def build_chain_registry(depth: int) -> ReducerRegistry:
 
 
 def current_balances(spark: SparkSession, store) -> DataFrame | None:
-    """Serving view: latest balance snapshot per address (B28
-    latest-per-key over the snapshot table)."""
-    from pyspark.sql import Window
+    """Serving view: every watched address's balance in the newest
+    snapshot (B28, the row the reference's balance reducer keeps per
+    address).
 
-    snaps = store.read_table(spark, "watched_address_balances")
+    Exact from the newest snapshot alone: every snapshot holds one
+    0-filled row per watched address (the balance reducer's ``prev``
+    CTE relies on the same fact), so no latest-per-key window over
+    all snapshots is needed. One manifest is pinned; its balance tip
+    prunes the read to the groups reaching it, which ``read_arrow``
+    reads in-process; the frame handed back is a local relation, so
+    a ``.filter(...).collect()`` on it starts no Spark job. Its size
+    is bounded by the watched set, not by chain length. An address
+    removed from the watched set is absent from the newest snapshot
+    and so is no longer served (a window over all snapshots kept
+    serving its stale last balance)."""
+    name = "watched_address_balances"
+    manifest = store.current_manifest()
+    groups = store.table_groups(name, manifest=manifest)
+    if not groups:
+        return None
+    snaps = store.read_arrow(
+        name, min_slot=max(g.max_slot for g in groups), manifest=manifest
+    )
     if snaps is None:
         return None
-    w = Window.partitionBy("address_name").orderBy(F.desc("slot"))
-    return (
-        snaps.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("address_name", "address", "slot", "balance")
+    newest = snaps.filter(pc.equal(snaps["slot"], pc.max(snaps["slot"])))
+    return spark.createDataFrame(
+        newest.select(["address_name", "address", "slot", "balance"])
     )

@@ -22,7 +22,7 @@ from argus_spark.chain.synth import synth_blocks, synth_inputs, synth_outputs, s
 from argus_spark.lifecycle.driver import ChainEvent, IndexDriver
 from argus_spark.lifecycle.duckstore import DuckDBStateStore
 from argus_spark.lifecycle.store import ReducerStateRow
-from argus_spark.reducers.examples import build_example_registry
+from argus_spark.reducers.examples import build_example_registry, current_balances
 from tests.conftest import SF_SMOKE
 
 
@@ -62,13 +62,9 @@ def expected_balances(spark, upto_slot=None):
 
 
 def driver_balances(spark, store):
-    df = store.read_table(spark, "watched_address_balances")
+    df = current_balances(spark, store)
     assert df is not None
-    mx = df.agg(F.max("slot")).first()[0]
-    return {
-        r["address_name"]: r["balance"]
-        for r in df.filter(F.col("slot") == mx).collect()
-    }
+    return {r["address_name"]: r["balance"] for r in df.collect()}
 
 
 def test_forward_sync_matches_oracle(spark, chain, tmp_path):
