@@ -565,7 +565,7 @@ class IndexDriver:
         max_rollback_slots) are merged, so retraction cost stays
         O(reorg depth) while read amplification and file fan-out stay
         bounded in chain length — the Delta/Iceberg OPTIMIZE analogue,
-        commit-atomic via the same manifest rename."""
+        commit-atomic via the same manifest publish."""
         tip = max((self._resume[r.name] for r in self._order), default=-1)
         horizon = tip - self.max_rollback_slots
         if horizon <= 0:

@@ -14,9 +14,9 @@ reference ships (Postgres + Mongo backends behind one IBlockUnitOfWork):
   * rollback = ``DELETE FROM t WHERE slot >= X`` per table, in the same
     transaction as the checkpoint rewind (A12 = B6) — the literal
     EfBlockUnitOfWork retraction
-  * keyed upserts append version-stamped rows (``_v``) resolved
-    latest-per-key on read, so slot-range retraction *resurrects* the
-    prior version (B7) with semantics identical to ParquetStateStore
+  * every table is slot-keyed and append-only, as in ParquetStateStore
+    (spend marks live in their own table), so that DELETE undoes every
+    mutation, a spend included (B7)
 
 Data path at scale — symmetric staging in BOTH directions, so no row
 ever transits the driver as a Python object:
@@ -24,13 +24,12 @@ ever transits the driver as a Python object:
   * writes: Spark stages each epoch's rows DISTRIBUTED to parquet; the
     transaction ingests them with DuckDB's ``read_parquet`` (the
     COPY-from-staging pattern every warehouse load uses)
-  * reads: the database ``COPY``s the resolved committed state (keyed
-    tables latest-per-key server-side) to a versioned parquet export,
-    and Spark reads it DISTRIBUTED with ``spark.read.parquet`` —
-    slot predicates push into the parquet scan (row-group pruning),
-    columns prune, and the scan parallelizes across executors. Exports
-    are cached per commit version, so N reads of one committed state
-    export once. This is the reference's pushdown boundary
+  * reads: the database ``COPY``s the committed state to a versioned
+    parquet export, and Spark reads it DISTRIBUTED with
+    ``spark.read.parquet`` — slot predicates push into the parquet
+    scan (row-group pruning), columns prune, and the scan parallelizes
+    across executors. Exports are cached per commit version, so N reads
+    of one committed state export once. This is the reference's pushdown boundary
     (EfBlockUnitOfWork.cs:124-140) re-expressed for a cluster: in a
     JDBC deployment the same method is ``spark.read.jdbc`` partitioned
     on slot; against a warehouse, its native parquet/object-store
@@ -63,7 +62,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from argus_spark.lifecycle.store import FileGroup, ReducerStateRow
+from argus_spark.lifecycle.store import FileGroup, ReducerStateRow, write_width
 
 
 def _q(name: str) -> str:
@@ -98,9 +97,10 @@ class DuckDBStateStore:
                  start_point TEXT, latest_points TEXT,
                  resume_slot BIGINT)"""
         )
+        # rows are inserted by column name: a catalog created by an
+        # older version carries an unused ``keyed`` column
         self._con.execute(
-            """CREATE TABLE IF NOT EXISTS _catalog(
-                 name TEXT PRIMARY KEY, keyed TEXT)"""
+            "CREATE TABLE IF NOT EXISTS _catalog(name TEXT PRIMARY KEY)"
         )
         self._con.execute(
             """CREATE TABLE IF NOT EXISTS _commits(
@@ -109,11 +109,8 @@ class DuckDBStateStore:
 
     # ---------------- catalog / manifest facade ----------------
 
-    def _tables(self) -> dict[str, list[str] | None]:
-        return {
-            r[0]: (json.loads(r[1]) if r[1] else None)
-            for r in self._con.execute("SELECT name, keyed FROM _catalog").fetchall()
-        }
+    def _tables(self) -> set[str]:
+        return {r[0] for r in self._con.execute("SELECT name FROM _catalog").fetchall()}
 
     def _version(self) -> int:
         v = self._con.execute("SELECT coalesce(max(id), 0) FROM _commits").fetchone()
@@ -131,9 +128,6 @@ class DuckDBStateStore:
             return {
                 "id": self._version(),
                 "tables": tables,
-                "keyed_tables": {
-                    n: k for n, k in self._tables().items() if k
-                },
                 "reducer_states": {
                     name: {
                         "created_at": created_at,
@@ -183,13 +177,12 @@ class DuckDBStateStore:
 
     # ---------------- reads ----------------
 
-    def _export_unlocked(self, name: str, keyed: list[str] | None) -> str | None:
-        """COPY the resolved committed state of ``name`` to a versioned
-        parquet export (cached per commit version) and return its
-        directory, or None when the table is empty. Keyed tables
-        resolve latest-per-key server-side before export — the
-        database-side work; slicing/pruning happens Spark-side on the
-        export. Runs under the store lock (single DuckDB connection)."""
+    def _export_unlocked(self, name: str) -> str | None:
+        """COPY the committed state of ``name`` to a versioned parquet
+        export (cached per commit version) and return its directory, or
+        None when the table is empty. Slicing/pruning happens Spark-side
+        on the export. Runs under the store lock (single DuckDB
+        connection)."""
         version = self._version()
         path = os.path.join(self.staging_dir, "_reads", f"{name}-v{version}")
         ok = os.path.join(path, "_argus_export_ok")  # _-prefixed: Spark ignores it
@@ -198,17 +191,8 @@ class DuckDBStateStore:
             return path
         if os.path.exists(empty):
             return None
-        if keyed:
-            keys = ", ".join(_q(k) for k in keyed)
-            sql = (
-                f"SELECT * EXCLUDE (_v, _rn) FROM ("
-                f"  SELECT *, row_number() OVER ("
-                f"    PARTITION BY {keys} ORDER BY _v DESC, slot DESC"
-                f"  ) AS _rn FROM {_q(name)}) WHERE _rn = 1"
-            )
-        else:
-            sql = f"SELECT * FROM {_q(name)}"
-        n = self._con.execute(f"SELECT count(*) FROM ({sql})").fetchone()[0]
+        sql = f"SELECT * FROM {_q(name)}"
+        n = self._con.execute(f"SELECT count(*) FROM {_q(name)}").fetchone()[0]
         if n == 0:
             os.makedirs(os.path.dirname(empty), exist_ok=True)
             open(empty, "w").close()
@@ -248,7 +232,7 @@ class DuckDBStateStore:
         manifest: dict | None = None,
     ) -> DataFrame | None:
         """Committed state back into Spark DISTRIBUTED: the database
-        exports its resolved state to parquet staging once per commit
+        exports its state to parquet staging once per commit
         version, Spark scans the export in parallel with the
         ``min_slot`` predicate pushed into the parquet scan. No
         ``.arrow()``/pandas driver funnel on the committed-read path
@@ -257,7 +241,7 @@ class DuckDBStateStore:
         with self._lock:
             if name not in self._tables():
                 return None
-            export = self._export_unlocked(name, self._tables().get(name))
+            export = self._export_unlocked(name)
         if export is None:
             # ReducerContext.table treats None as "no committed rows"
             return None
@@ -276,17 +260,10 @@ class DuckDBStateStore:
         ``reducers.examples.current_balances``): one ``SELECT ... WHERE
         slot >= min_slot`` fetched with ``.arrow()``, no Spark job and
         no export. ``manifest`` is ignored (live state, see the module
-        docstring). Returns None when no row is left. Keyed tables
-        raise ``ValueError``: their latest-per-key resolution is
-        :meth:`read_table`'s."""
+        docstring). Returns None when no row is left."""
         with self._lock:
-            tables = self._tables()
-            if name not in tables:
+            if name not in self._tables():
                 return None
-            if tables[name]:
-                raise ValueError(
-                    f"{name!r} is a keyed table; read it with read_table"
-                )
             sql, params = f"SELECT * FROM {_q(name)}", []
             if min_slot is not None:
                 sql, params = sql + " WHERE slot >= ?", [int(min_slot)]
@@ -302,32 +279,28 @@ class DuckDBStateStore:
         retract_from: dict[str, int] | None = None,
         spark: SparkSession | None = None,
         meta: dict[str, Any] | None = None,
-        upserts: dict[str, tuple[DataFrame, list[str], int, int]] | None = None,
         write_parts: int | None = None,
         write_shuffle: bool = False,
     ) -> dict:
-        """One database transaction: retraction + appends + upserts +
-        checkpoint rows, all-or-nothing. Spark stages each table's rows
-        as parquet (distributed write), the transaction ingests the
-        staged files; a crash before COMMIT leaves only orphaned
-        staging files (swept on the next commit)."""
+        """One database transaction: retraction + appends + checkpoint
+        rows, all-or-nothing. Spark stages each table's rows as parquet
+        (distributed write, at the write width ``write_parts`` /
+        ``write_shuffle`` the driver sized, see ``store.write_width``),
+        the transaction ingests the staged files; a crash before COMMIT
+        leaves only orphaned staging files (swept on the next commit)."""
         # Phase 1 — distributed staging writes (outside the db tx),
         # registered in-flight so a concurrent vacuum can't sweep them.
-        staged: dict[str, tuple[str, bool, list[str] | None]] = {}
+        staged: dict[str, str] = {}
         stage_batch = os.path.join(self.staging_dir, f"e-{uuid.uuid4().hex}")
         with self._stage_lock:
             self._inflight_stages.add(stage_batch)
         try:
             for name, (df, lo, hi) in appends.items():
                 path = os.path.join(stage_batch, name)
-                d = df.coalesce(write_parts) if write_parts else df
-                d.write.mode("overwrite").parquet(path)
-                staged[name] = (path, False, None)
-            for name, (df, keys, lo, hi) in (upserts or {}).items():
-                path = os.path.join(stage_batch, name)
-                d = df.coalesce(write_parts) if write_parts else df
-                d.write.mode("overwrite").parquet(path)
-                staged[name] = (path, True, list(keys))
+                write_width(df, write_parts, write_shuffle).write.mode(
+                    "overwrite"
+                ).parquet(path)
+                staged[name] = path
             return self._ingest_staged(
                 staged, stage_batch, retract_from, states, meta
             )
@@ -348,30 +321,19 @@ class DuckDBStateStore:
                         )
                 import glob as globmod
 
-                for name, (path, is_upsert, keys) in staged.items():
+                for name, path in staged.items():
                     glob = os.path.join(path, "*.parquet")
                     if not globmod.glob(glob):
                         continue  # empty epoch output — nothing staged
-                    prev_keys = catalog.get(name)
-                    if is_upsert and prev_keys is not None and prev_keys != keys:
-                        raise ValueError(
-                            f"upsert keys for {name!r} changed: {prev_keys} -> {keys}"
-                        )
                     sel = f"SELECT * FROM read_parquet('{glob}')"
-                    if is_upsert:
-                        sel = (
-                            f"SELECT *, {version} AS _v"
-                            f" FROM read_parquet('{glob}')"
-                        )
                     if name not in catalog:
                         self._con.execute(
                             f"CREATE TABLE {_q(name)} AS {sel}"
                         )
                         self._con.execute(
-                            "INSERT INTO _catalog VALUES (?, ?)",
-                            [name, json.dumps(keys) if is_upsert else None],
+                            "INSERT INTO _catalog (name) VALUES (?)", [name]
                         )
-                        catalog[name] = keys if is_upsert else None
+                        catalog.add(name)
                     else:
                         self._con.execute(f"INSERT INTO {_q(name)} {sel}")
                 for name, st in (states() if states else {}).items():
@@ -399,7 +361,7 @@ class DuckDBStateStore:
 
     # ---------------- maintenance (db-native no-ops) ----------------
 
-    def compact(self, spark: SparkSession, name: str, upto_slot: int | None = None):
+    def compact(self, spark: SparkSession, name: str, upto_slot: int) -> dict:
         return self.current_manifest()  # the database maintains its own layout
 
     def vacuum(self) -> int:

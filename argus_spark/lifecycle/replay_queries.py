@@ -154,7 +154,7 @@ def lifecycle_reorg_replay_sqltxn(
     """The SAME reorg scenario as ``lifecycle_reorg_replay``, driven
     into the SQL-TRANSACTION backend (lifecycle/duckstore.py — the
     reference's EF/Postgres deployment shape: one ACID transaction per
-    epoch, keyed MERGE upserts, slot-range retraction as SQL DELETEs,
+    epoch, slot-keyed appends, slot-range retraction as SQL DELETEs,
     synchronous commits since a live database has no pinned
     snapshots). Same oracle as the parquet-backend row, so a green
     pair certifies both A11 backends converge to the identical state
@@ -200,7 +200,7 @@ def lifecycle_reorg_replay_sqltxn(
 
 class _CrashingStore(ParquetStateStore):
     """Injects a crash at the A11 commit point: data files for the
-    torn epoch are on disk, the manifest rename never happens — the
+    torn epoch are on disk, the manifest publish never happens — the
     exact torn state the atomic-commit design makes invisible."""
 
     def __init__(self, root: str, publishes_before_crash: int) -> None:

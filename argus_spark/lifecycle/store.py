@@ -9,7 +9,7 @@ isolation itself:
   * every epoch writes fresh immutable parquet file-groups per table
   * one JSON **manifest** lists, per table, the live file-groups (with
     their slot ranges) plus every reducer's checkpoint window
-  * publishing = write-temp + atomic ``os.rename`` of the manifest —
+  * publishing = write-temp + atomic ``os.link`` of the manifest —
     a crash leaves the previous manifest intact; data files not yet
     referenced are invisible garbage (A18 fail-fast: the whole open
     batch vanishes)
@@ -21,7 +21,8 @@ rewritten filtered (copy-on-write), and the bulk of the table — groups
 below X — is untouched. Retraction cost scales with reorg depth, not
 table size: the property that survives at 100 TB. In-place updates are
 re-architected as appends (spend marks live in their own slot-keyed
-table) so this holds for every mutation.
+table), so every committed table is a slot-keyed append table and this
+holds for every mutation.
 
 At deployment scale the same contract maps 1:1 onto Delta/Iceberg
 (transactional snapshot + MERGE/DELETE); this store keeps v1 dependency-
@@ -49,6 +50,19 @@ from argus_spark.lifecycle.state import Point
 
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
+
+
+def write_width(df: DataFrame, parts: int | None, shuffle: bool) -> DataFrame:
+    """Apply the driver's per-epoch write width (see ``IndexDriver._flush``)
+    to ``df`` before a store writes it; both stores call this.
+    ``coalesce`` is free but PROPAGATES UP a narrow lineage, so a
+    compute-heavy epoch would run its whole explode/join pipeline at the
+    write width (measured 4x knee-throughput collapse); ``shuffle``
+    epochs therefore ``repartition`` — one small shuffle decouples
+    lineage parallelism (full) from output width (few files)."""
+    if not parts or parts <= 0:
+        return df
+    return df.repartition(parts) if shuffle else df.coalesce(parts)
 
 
 @dataclass
@@ -107,7 +121,7 @@ class ParquetStateStore:
         os.makedirs(os.path.join(root, DATA_DIR), exist_ok=True)
         # group paths being written by commits that have not published
         # yet: vacuum must never sweep these. Commits write data files
-        # BEFORE the manifest rename, so "absent from the current
+        # BEFORE the manifest publish, so "absent from the current
         # manifest" alone cannot distinguish garbage from another
         # driver's in-flight epoch (MultiRootDriver shares one store).
         self._inflight_lock = threading.Lock()
@@ -129,17 +143,24 @@ class ParquetStateStore:
     def _publish(self, manifest: dict) -> None:
         mid = manifest["id"]
         path = os.path.join(self.root, MANIFEST_DIR, f"{mid:012d}.json")
-        if os.path.exists(path):
-            # a lost-update would silently drop the earlier commit's
-            # file-groups; two writers racing one version must fail
-            # loudly instead (single-writer is the contract — A19)
-            raise RuntimeError(f"manifest {mid} already published (lost update?)")
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
             fh.flush()
             os.fsync(fh.fileno())
-        os.rename(tmp, path)  # the commit point — atomic on POSIX
+        try:
+            # the commit point. A hard link is atomic and, unlike a
+            # rename, never replaces an existing file: a lost update
+            # would silently drop the earlier commit's file-groups, so
+            # two writers racing one version must fail loudly instead
+            # (single-writer is the contract — A19)
+            os.link(tmp, path)
+        except FileExistsError:
+            raise RuntimeError(
+                f"manifest {mid} already published (lost update?)"
+            ) from None
+        finally:
+            os.remove(tmp)
         # groups referenced by a published manifest are no longer
         # in-flight (vacuum protects them via the manifest instead).
         # Groups of a FAILED commit stay registered for the process
@@ -177,46 +198,22 @@ class ParquetStateStore:
     ) -> DataFrame | None:
         """Snapshot read. ``min_slot`` prunes file-groups by their slot
         range before Spark ever lists them (manifest-level partition
-        pruning). Keyed tables (see :meth:`commit` ``upserts``) resolve
-        merge-on-read: latest version per key wins.
+        pruning); a group reaching ``min_slot`` is read whole, so rows
+        below it may come back.
 
         ``manifest`` pins the read to an explicit snapshot (time-travel
         — the driver reads every epoch against the manifest it started
         on, so another root's publish can't shift committed state
-        mid-epoch). Default: the latest published manifest.
-
-        For a KEYED table, group pruning happens after latest-per-key
-        resolution (as a row filter), never before: a pruned group
-        (max_slot < min_slot) can hold a key's newest ``_v`` while an
-        older version survives in a wide-slot-range group — pre-pruning
-        would resurrect the stale version as "latest"."""
-        if manifest is None:
-            manifest = self.current_manifest()
-        keys = manifest.get("keyed_tables", {}).get(name)
-        groups = self.table_groups(name, None if keys else min_slot, manifest)
+        mid-epoch). Default: the latest published manifest."""
+        groups = self.table_groups(name, min_slot, manifest)
         if not groups:
             return None
         paths = [os.path.join(self.root, g.path) for g in groups]
         reader = spark.read
         known = self._schemas.get(name)
         if known is not None:
-            # learned from our own writes (keyed groups carry _v there,
-            # so it matches the on-disk files either way)
-            reader = reader.schema(known)
-        df = reader.parquet(*paths)
-        if keys:
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-
-            w = Window.partitionBy(*keys).orderBy(F.desc("_v"), F.desc("slot"))
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "_v")
-            )
-            if min_slot is not None:
-                df = df.filter(F.col("slot") >= min_slot)
-        return df
+            reader = reader.schema(known)  # learned from our own writes
+        return reader.parquet(*paths)
 
     def read_arrow(
         self,
@@ -229,14 +226,7 @@ class ParquetStateStore:
         :meth:`read_table` would scan for the same ``min_slot`` and
         ``manifest``, read by ``pyarrow.dataset`` on the calling thread
         as one Arrow table, with no Spark job. Returns None when no
-        group is left. Keyed tables raise ``ValueError``: their
-        latest-per-key resolution is :meth:`read_table`'s."""
-        if manifest is None:
-            manifest = self.current_manifest()
-        if name in manifest.get("keyed_tables", {}):
-            raise ValueError(
-                f"{name!r} is a keyed table; read it with read_table"
-            )
+        group is left."""
         groups = self.table_groups(name, min_slot, manifest)
         if not groups:
             return None
@@ -279,15 +269,7 @@ class ParquetStateStore:
         full = os.path.join(self.root, rel)
         with self._inflight_lock:
             self._inflight_groups.add(rel)
-        if parts is not None and parts > 0:
-            # Write-width control (driver-sized per epoch, see _flush):
-            # ``coalesce`` for small epochs — free, but it PROPAGATES UP
-            # a narrow lineage, so a compute-heavy epoch would run its
-            # whole explode/join pipeline at the write width (measured
-            # 4x knee-throughput collapse). Large epochs therefore use
-            # ``repartition`` — one small shuffle decouples lineage
-            # parallelism (full) from output width (few files).
-            df = df.repartition(parts) if shuffle else df.coalesce(parts)
+        df = write_width(df, parts, shuffle)
         df.write.mode("overwrite").parquet(full)
         self._schemas[name] = df.schema
         rows = pads.dataset(full, format="parquet").count_rows()
@@ -305,21 +287,19 @@ class ParquetStateStore:
         retract_from: dict[str, int] | None = None,
         spark: SparkSession | None = None,
         meta: dict[str, Any] | None = None,
-        upserts: dict[str, tuple[DataFrame, list[str], int, int]] | None = None,
         write_parts: int | None = None,
         write_shuffle: bool = False,
     ) -> dict:
         """One atomic transaction: optional slot-range retraction,
-        appends + keyed upserts for any number of tables, and
-        checkpoint upserts.
+        appends for any number of tables, and the checkpoint rows.
 
         ``appends[table] = (df, min_slot, max_slot)`` — the epoch's slot
         range is known to the driver, so no extra jobs to discover it.
         Appends are written first, outside ``_publish_lock`` (file-
-        groups stay invisible until the manifest rename, so another
+        groups stay invisible until the manifest is published, so another
         root may publish meanwhile). Then, under the lock: read the
-        current manifest, retract, write upserts, call ``states``,
-        assemble and publish — the rename publishes everything at once.
+        current manifest, retract, call ``states``, assemble and
+        publish — one manifest publishes everything at once.
 
         ALL of a commit's table writes run concurrently regardless of
         DAG level. Dependents referencing a parent's cached epoch
@@ -333,17 +313,6 @@ class ParquetStateStore:
         ``retract_from[table] = slot`` deletes ``slot >= slot`` from each
         listed table (A12 reorg retraction, A17 per-reducer rewind
         overrides); unlisted tables are untouched.
-
-        ``upserts[table] = (df, keys, lo, hi)`` — B5 keyed MERGE as
-        merge-on-read: the new rows are appended stamped with the commit
-        version; :meth:`read_table` resolves latest-per-key. Writes stay
-        O(delta) at any table size (the Delta/Iceberg MERGE-on-read
-        strategy), :meth:`compact` bounds read amplification, and slot-
-        range retraction automatically *resurrects* the previous version
-        of a key (the reference's spent-slot un-update, B7) because the
-        newer version lives in a newer slot range. Upserts write under
-        the lock: their version stamp is the manifest id being
-        published.
 
         ``states`` — optional zero-arg callable returning the checkpoint
         rows, called after the data writes finish but before the
@@ -360,34 +329,14 @@ class ParquetStateStore:
             tables: dict[str, list[dict]] = {
                 k: list(v) for k, v in manifest["tables"].items()
             }
-            keyed: dict[str, list[str]] = dict(manifest.get("keyed_tables", {}))
             if retract_from:
                 assert spark is not None, "retraction needs a SparkSession"
                 tables = self._retract_groups(spark, tables, retract_from)
-
-            version = manifest["id"] + 1
-            upsert_tasks: list[tuple[str, DataFrame, int, int]] = []
-            for name, (df, keys, lo, hi) in (upserts or {}).items():
-                prev = keyed.get(name)
-                if prev is not None and prev != list(keys):
-                    raise ValueError(
-                        f"upsert keys for {name!r} changed: {prev} -> {list(keys)}"
-                    )
-                keyed[name] = list(keys)
-                from pyspark.sql import functions as F
-
-                upsert_tasks.append(
-                    (name, df.withColumn("_v", F.lit(version)), lo, hi)
-                )
-
-            for name, group in appended + self._write_groups_parallel(
-                upsert_tasks, write_parts, write_shuffle
-            ):
+            for name, group in appended:
                 if group is not None:
                     tables.setdefault(name, []).append(group.as_dict())
-
             new_manifest = self._assemble(
-                manifest, tables, keyed, states() if states else None, meta
+                manifest, tables, states() if states else None, meta
             )
             self._publish(new_manifest)
         return new_manifest
@@ -401,7 +350,7 @@ class ParquetStateStore:
         """ALL tables write concurrently (see commit docstring:
         block-manager write locks make cross-level concurrency safe and
         dedupe any cached parent computation). Nothing is visible until
-        the manifest rename."""
+        the manifest publish."""
         from concurrent.futures import ThreadPoolExecutor
 
         if len(write_tasks) > 1:
@@ -426,7 +375,6 @@ class ParquetStateStore:
         self,
         manifest: dict,
         tables: dict[str, list[dict]],
-        keyed: dict[str, list[str]],
         states: dict[str, ReducerStateRow] | None,
         meta: dict[str, Any] | None,
     ) -> dict:
@@ -443,7 +391,6 @@ class ParquetStateStore:
             "id": manifest["id"] + 1,
             "ts": time.time(),
             "tables": tables,
-            "keyed_tables": keyed,
             "reducer_states": new_states,
             "meta": meta or {},
         }
@@ -499,63 +446,37 @@ class ParquetStateStore:
         mm = pc.min_max(slots)
         return mm["min"].as_py(), mm["max"].as_py()
 
-    def compact(
-        self, spark: SparkSession, name: str, upto_slot: int | None = None
-    ) -> dict:
-        """Bound read amplification (keyed tables) and group fan-out
-        (append tables) by merging file-groups. Publishes a new
-        manifest; old groups become vacuum-able garbage.
-
-        ``upto_slot=None`` — full compaction: rewrite the whole table as
-        one *resolved* group (latest-per-key for keyed tables).
-
-        ``upto_slot=X`` — frozen-zone compaction, the form the driver
-        schedules: merge only groups wholly at or below ``X`` (the
-        rollback horizon, tip − max_rollback_slots) into one group by
-        RAW file concatenation — per-row ``_v`` stamps are preserved, so
-        merge-on-read semantics are untouched, and groups above the
-        horizon keep their boundaries, so retraction cost stays
-        O(reorg depth). At 100 TB this runs per slot-range partition,
-        not whole-table."""
-        from pyspark.sql import functions as F
-
+    def compact(self, spark: SparkSession, name: str, upto_slot: int) -> dict:
+        """Frozen-zone compaction, bounding group fan-out: merge the
+        groups of ``name`` wholly at or below ``upto_slot`` (the driver
+        passes the rollback horizon, tip − max_rollback_slots) into one
+        group by raw file concatenation, and publish a new manifest; the
+        old groups become vacuum-able garbage. Groups above the horizon
+        keep their boundaries, so retraction cost stays O(reorg depth).
+        At 100 TB this runs per slot-range partition, not whole-table."""
         # the whole read→write→publish runs under the publish lock: the
         # merged group replaces groups chosen from THIS manifest, so a
-        # concurrent commit must not publish between the read and the
-        # rename
+        # concurrent commit must not publish between the read and this
+        # publish
         with self._publish_lock:
             manifest = self.current_manifest()
-            version = manifest["id"] + 1
             groups = self.table_groups(name, manifest=manifest)
-            if upto_slot is not None:
-                frozen = [g for g in groups if g.max_slot <= upto_slot]
-                live = [g for g in groups if g.max_slot > upto_slot]
-                if len(frozen) < 2:
-                    return manifest
-                raw = spark.read.parquet(
-                    *[os.path.join(self.root, g.path) for g in frozen]
-                )
-                lo = min(g.min_slot for g in frozen)
-                hi = max(g.max_slot for g in frozen)
-                group = self._write_group(name, raw, lo, hi)
-                merged = ([group.as_dict()] if group else []) + [
-                    g.as_dict() for g in live
-                ]
-            else:
-                if not groups:
-                    return manifest
-                resolved = self.read_table(spark, name, manifest=manifest)
-                keys = manifest.get("keyed_tables", {}).get(name)
-                if keys:
-                    resolved = resolved.withColumn("_v", F.lit(version))
-                lo = min(g.min_slot for g in groups)
-                hi = max(g.max_slot for g in groups)
-                group = self._write_group(name, resolved, lo, hi)
-                merged = [group.as_dict()] if group else []
+            frozen = [g for g in groups if g.max_slot <= upto_slot]
+            live = [g for g in groups if g.max_slot > upto_slot]
+            if len(frozen) < 2:
+                return manifest
+            raw = spark.read.parquet(
+                *[os.path.join(self.root, g.path) for g in frozen]
+            )
+            lo = min(g.min_slot for g in frozen)
+            hi = max(g.max_slot for g in frozen)
+            group = self._write_group(name, raw, lo, hi)
             tables = {k: list(v) for k, v in manifest["tables"].items()}
-            tables[name] = merged
+            tables[name] = ([group.as_dict()] if group else []) + [
+                g.as_dict() for g in live
+            ]
             new_manifest = self._assemble(
-                manifest, tables, dict(manifest.get("keyed_tables", {})), None,
+                manifest, tables, None,
                 {"compacted": name, "upto_slot": upto_slot},
             )
             self._publish(new_manifest)

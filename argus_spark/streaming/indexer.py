@@ -107,18 +107,21 @@ class StreamingIndexer:
         """Construct from an appsettings-shaped ``IndexerConfig``
         (lifecycle/config.py): ``Sync:Commit:BatchSize`` → driver epoch
         size, ``CardanoNodeConnection:RollbackBuffer`` → checkpoint
-        window, ``Sync:Pipeline:ChannelCapacity`` → files per trigger
+        window, ``CardanoNodeConnection:MaxRollbackSlots`` → reorg depth
+        guard, ``Sync:Pipeline:ChannelCapacity`` → files per trigger
         (the bounded-inbox capacity, A6 — the reference suspends the
         producer at this depth; the file source simply never requests
         more). Pair with ``run_available_now`` when
         ``cfg.exit_on_completion`` (the reference's
         ``Sync:Worker:ExitOnCompletion``) else ``run_continuous``."""
-        return cls(
+        si = cls(
             spark, registry, store, blocks_df, feed_dir, checkpoint_dir,
             batch_size=cfg.batch_size,
             max_files_per_trigger=cfg.channel_capacity,
             window_k=cfg.window_k,
         )
+        si.driver.max_rollback_slots = cfg.max_rollback_slots
+        return si
 
     def run_from_config(self, cfg):
         """Dispatch on the reference's ExitOnCompletion flag: bounded

@@ -324,6 +324,24 @@ def test_streaming_indexer_from_config(spark, tmp_path):
         blocks.unpersist()
 
 
+def test_streaming_indexer_from_config_forwards_max_rollback_slots(spark, tmp_path):
+    """``CardanoNodeConnection:MaxRollbackSlots`` sets the reorg depth
+    guard of the streaming path's driver, as ``driver_kwargs`` does for
+    a config-built ``IndexDriver``, instead of the 10,000-slot default."""
+    from argus_spark.streaming.indexer import StreamingIndexer
+
+    cfg = IndexerConfig.from_dict(BASE)
+    blocks = spark.createDataFrame([(0,)], "slot long")
+    reg = ReducerRegistry().register(
+        Reducer("block_tests", _blocks_reducer, tables=["block_tests"])
+    )
+    si = StreamingIndexer.from_config(
+        spark, reg, ParquetStateStore(str(tmp_path / "store")), blocks,
+        str(tmp_path / "feed"), str(tmp_path / "ck"), cfg,
+    )
+    assert si.driver.max_rollback_slots == cfg.max_rollback_slots == 1000
+
+
 def test_wrong_rollback_hash_refuses_rewind(spark, tmp_path):
     """A configured intersection whose hash contradicts the COMMITTED
     checkpoint at that slot is not on this chain — the rewind must be

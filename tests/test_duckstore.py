@@ -1,11 +1,11 @@
 """DuckDBStateStore backend parity (SURVEY §2.A A11/A12, B5-B7 on the
 reference's EF/Postgres deployment shape): the SAME IndexDriver + reducer
 DAG commits into a real ACID SQL database — one transaction per epoch
-covering data + checkpoints, DELETE-where retraction, versioned keyed
-upserts with retraction resurrect. Mirrors the ParquetStateStore e2e
-coverage in test_lifecycle_e2e.py; equality against the same stateless
-oracle proves backend interchangeability (the reference's
-IBlockUnitOfWork portability, EfBlockUnitOfWork.cs:94-121)."""
+covering data + checkpoints, DELETE-where retraction of slot-keyed
+appends (spends included), and the driver's write width. Mirrors the
+ParquetStateStore e2e coverage in test_lifecycle_e2e.py; equality
+against the same stateless oracle proves backend interchangeability (the
+reference's IBlockUnitOfWork portability, EfBlockUnitOfWork.cs:94-121)."""
 
 from __future__ import annotations
 
@@ -108,19 +108,26 @@ def test_rollback_then_replay(spark, chain, tmp_path):
     store.close()
 
 
-def test_keyed_upsert_and_retraction_resurrect(spark, tmp_path):
-    """B5 keyed MERGE + B7 resurrect on the SQL backend: newer version
-    wins on read; slot-range retraction brings the old version back."""
+@pytest.mark.parametrize("shuffle", [False, True])
+def test_commit_applies_write_width(spark, tmp_path, monkeypatch, shuffle):
+    """The staging write takes the driver's write width as the Parquet
+    store does: ``write_shuffle`` repartitions (coalesce would run the
+    epoch's whole lineage at the write width), otherwise it coalesces."""
+    rows = spark.createDataFrame([(s, s) for s in range(10)], "slot long, x long")
+    calls = []
+    for method in ("repartition", "coalesce"):
+        real = getattr(type(rows), method)
+
+        def spy(self, *args, _real=real, _method=method, **kwargs):
+            calls.append((_method, args))
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(type(rows), method, spy)
     store = DuckDBStateStore(str(tmp_path / "argus.duckdb"))
-    v1 = spark.createDataFrame([("k1", 10, 1), ("k2", 20, 1)], "k string, v int, slot long")
-    store.commit(appends={}, upserts={"kv": (v1, ["k"], 1, 1)})
-    v2 = spark.createDataFrame([("k1", 99, 5)], "k string, v int, slot long")
-    store.commit(appends={}, upserts={"kv": (v2, ["k"], 5, 5)})
-    got = {r["k"]: r["v"] for r in store.read_table(spark, "kv").collect()}
-    assert got == {"k1": 99, "k2": 20}
-    store.commit(appends={}, retract_from={"kv": 5}, spark=spark)
-    got = {r["k"]: r["v"] for r in store.read_table(spark, "kv").collect()}
-    assert got == {"k1": 10, "k2": 20}  # old version resurrected
+    store.commit(appends={"t": (rows, 0, 9)}, write_parts=1, write_shuffle=shuffle)
+    want = "repartition" if shuffle else "coalesce"
+    assert calls == [(want, (1,))]
+    assert store.read_arrow("t").num_rows == 10
     store.close()
 
 
@@ -145,8 +152,8 @@ def test_read_path_is_distributed_parquet_scan(spark, tmp_path):
     assert df.count() == 50
 
     # export caching: same committed version reads the same export
-    e1 = store._export_unlocked("t", None)
-    e2 = store._export_unlocked("t", None)
+    e1 = store._export_unlocked("t")
+    e2 = store._export_unlocked("t")
     assert e1 == e2 and e1 is not None
 
     # new commits bump the version; exports ≥2 versions old are reaped

@@ -143,10 +143,33 @@ class TestStoreHygiene:
         assert store.vacuum() == 0  # in-flight, not yet in any manifest
         assert os.path.exists(os.path.join(store.root, g.path))
         m = store.current_manifest()
-        store._publish(store._assemble(m, {"t": [g.as_dict()]}, {}, None, {}))
+        store._publish(store._assemble(m, {"t": [g.as_dict()]}, None, {}))
         assert store.vacuum() == 0  # now manifest-protected
         assert ParquetStateStore(store.root).vacuum() == 0
         assert os.path.exists(os.path.join(store.root, g.path))
+
+    def test_publish_never_overwrites_a_racing_manifest(self, tmp_path, monkeypatch):
+        """Two writers publishing one manifest id: the one that lands
+        second must fail loudly, even when the other lands between its
+        existence check and its publish, and leave the first intact."""
+        import json
+
+        from argus_spark.lifecycle import store as store_mod
+
+        store = store_mod.ParquetStateStore(str(tmp_path / "s"))
+        path = os.path.join(store.root, store_mod.MANIFEST_DIR, f"{1:012d}.json")
+        theirs = {"id": 1, "tables": {}, "reducer_states": {}, "meta": {"w": "a"}}
+        with open(path, "w") as fh:
+            json.dump(theirs, fh)
+        # the other writer lands just after any existence check
+        monkeypatch.setattr(store_mod.os.path, "exists", lambda p: False)
+        ours = dict(theirs, meta={"w": "b"})
+        with pytest.raises(RuntimeError, match="already published"):
+            store._publish(ours)
+        monkeypatch.undo()
+        with open(path) as fh:
+            assert json.load(fh) == theirs
+        assert os.listdir(os.path.dirname(path)) == [os.path.basename(path)]
 
     def test_table_tip_truth_up_on_empty_output(self, spark, tmp_path):
         """An epoch whose output evaluates EMPTY writes no group, so the
