@@ -36,9 +36,10 @@ sink has no such latency to hide, and on local[N] overlapping epochs
 measured slower and far less stable (cross-epoch write jobs racing
 over shared cold caches gave 2-6x wall-clock swings). Within an epoch
 work is concurrent: same-level reducers build plans in parallel, every
-table writes concurrently, and the tip-points collect overlaps both. Every committed read of an epoch is pinned to the manifest
-current when the epoch started, so another root publishing mid-epoch
-on a shared store cannot shift what a reducer sees.
+table writes concurrently, and the tip-points collect overlaps both.
+Every committed read of an epoch is pinned to the manifest current when
+the epoch started, so another root publishing mid-epoch on a shared
+store cannot shift what a reducer sees.
 
 Control flow (event sequencing, checkpoint windows) is driver-side
 Python over tiny metadata; block payloads only ever move through
@@ -286,6 +287,11 @@ class IndexDriver:
         # in-memory checkpoint windows, loaded from the committed manifest
         self._windows: dict[str, list[Point]] = {}
         self._resume: dict[str, int] = {}
+        # the checkpoint rows' fixed fields, also loaded once: a commit
+        # never re-reads the store for them. created_at stays None until
+        # the reducer's first commit stamps it.
+        self._created_at: dict[str, float | None] = {}
+        self._start_point: dict[str, dict | None] = {}
         # pools created lazily at first flush (tests build many drivers
         # that never run); threads are reaped by executor atexit
         self._ctl_pool_ = None
@@ -322,6 +328,8 @@ class IndexDriver:
         for r in self._order:
             st = states.get(r.name)
             self._windows[r.name] = st.window() if st else []
+            self._created_at[r.name] = st.created_at if st else None
+            self._start_point[r.name] = st.start_point if st else None
         for r in self._order:
             st = states.get(r.name)
             # exact committed floor: persisted resume cursor, falling back
@@ -587,14 +595,14 @@ class IndexDriver:
         return list(self.store.current_manifest()["tables"])
 
     def _state_rows(self) -> dict[str, ReducerStateRow]:
-        existing = self.store.reducer_states()
         out = {}
         for r in self._order:
-            prev = existing.get(r.name)
+            if self._created_at[r.name] is None:
+                self._created_at[r.name] = time.time()
             out[r.name] = ReducerStateRow(
                 name=r.name,
-                created_at=prev.created_at if prev else time.time(),
-                start_point=prev.start_point if prev else None,
+                created_at=self._created_at[r.name],
+                start_point=self._start_point[r.name],
                 latest_points=[p.as_dict() for p in self._windows[r.name]],
                 resume_slot=self._resume[r.name],
             )

@@ -80,10 +80,10 @@ class DuckDBStateStore:
         os.makedirs(self.staging_dir, exist_ok=True)
         self._con = duckdb.connect(db_path)
         # one writer at a time — DuckDB connections are not thread-safe
-        # and the single-writer contract (A19) is per-store anyway.
-        # REENTRANT: commit() holds it across the transaction and its
-        # ``states`` callback reads reducer_states() on the same thread.
-        self._lock = threading.RLock()
+        # and the single-writer contract (A19) is per-store anyway. Not
+        # reentrant: commit() holds it across the transaction, so its
+        # ``states`` callback must not call back into the store.
+        self._lock = threading.Lock()
         # write-staging batches currently being written by a commit's
         # phase 1 (which runs OUTSIDE self._lock so distributed writes
         # overlap): vacuum must never sweep these — with concurrent

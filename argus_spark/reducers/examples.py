@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from argus_spark.lifecycle.dag import Reducer, ReducerRegistry
 
@@ -237,54 +236,6 @@ def build_example_registry(spark: SparkSession, watched: DataFrame) -> ReducerRe
             tables=["watched_address_balances"],
         )
     )
-    return reg
-
-
-def build_chain_registry(depth: int) -> ReducerRegistry:
-    """Linear dependency chain of ``depth`` reducers — the topology of
-    the reference's pipeline bench (src/Argus.Sync.Bench/README.md:7,
-    LinearDepth3): the root emits one row per block; each child reads
-    its parent's uncommitted epoch output (read-your-writes, B17) and
-    re-emits with one more hop stamped.
-
-    Used by bench.py to measure throughput vs DAG depth. The reference's
-    sequential cascade collapses ~30x at depth 3 (274 vs 8,200 slots/s)
-    because every envelope waits on per-reducer DB round-trips; here
-    stages compose lazily into Spark plans and the per-epoch sink writes
-    run concurrently, so throughput should be depth-independent."""
-    reg = ReducerRegistry()
-
-    def _root(ctx) -> dict[str, DataFrame]:
-        return {
-            "chain_1": ctx.blocks.select(
-                "slot", F.lit(1).cast("long").alias("hops")
-            )
-        }
-
-    reg.register(Reducer("chain_1", _root, tables=["chain_1"]))
-    for i in range(2, depth + 1):
-
-        def _mk(i: int):
-            def _apply(ctx) -> dict[str, DataFrame]:
-                parent = ctx.table(f"chain_{i - 1}", min_slot=ctx.epoch_range[0])
-                lo, hi = ctx.epoch_range
-                df = parent.filter(F.col("slot").between(lo, hi))
-                return {
-                    f"chain_{i}": df.select(
-                        "slot", (F.col("hops") + 1).alias("hops")
-                    )
-                }
-
-            return _apply
-
-        reg.register(
-            Reducer(
-                f"chain_{i}",
-                _mk(i),
-                depends_on=f"chain_{i - 1}",
-                tables=[f"chain_{i}"],
-            )
-        )
     return reg
 
 

@@ -33,8 +33,12 @@ def write_feed_file(feed_dir: str, file_idx: int, events: list[dict]) -> str:
     """Append one feed file (ndjson). ``file_idx`` fixes arrival order;
     each event dict needs at least (seq, action) + the action's fields."""
     os.makedirs(feed_dir, exist_ok=True)
-    path = os.path.join(feed_dir, f"feed-{file_idx:08d}.json")
-    tmp = path + ".tmp"
+    name = f"feed-{file_idx:08d}.json"
+    path = os.path.join(feed_dir, name)
+    # Spark's file source lists every name not starting with "." or "_",
+    # so the temp file is dot-prefixed: a stream triggering mid-write
+    # must not read it. Same directory, so the rename stays atomic.
+    tmp = os.path.join(feed_dir, f".{name}.tmp")
     with open(tmp, "w") as f:
         for ev in events:
             row = {

@@ -92,10 +92,6 @@ def blocks_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(ingest_blocks(spark, sf_dir))
 
 
-def block_count(spark: SparkSession, sf_dir: str) -> int:
-    return blocks_table(spark, sf_dir).count()
-
-
 def _outputs_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flat created-outputs lineage (explode of the materialized nested
     table; reads the parquet path directly — must not recurse back

@@ -21,22 +21,10 @@ the store's ``reducer_states`` tracks *semantic progress* (slots
 committed per reducer). A crash between them is safe in both
 directions — unread files replay, replayed blocks are skipped.
 
-TIP-MODE OVERHEAD, profiled (scripts/profile_tip.py, r7): on the
-bench workload (2,000 blocks, batch 500; tip = maxFilesPerTrigger=1 →
-5 triggers, catch-up = one availableNow trigger), in-foreachBatch time
-is mode-INDEPENDENT (driver 4.4-5.2s both modes — same epochs either
-way) and the only structural difference is the streaming engine's
-fixed per-trigger cost: 0.27s for 1 trigger vs 0.78s for 5 → ~130-160
-ms marginal per trigger, spent in offset-WAL + commit-log writes,
-file-source listing, micro-batch planning, and the control-plane
-collect job's scheduling. That is Structured Streaming's irreducible
-foreachBatch machinery (a sort job per trigger was already cut,
-r6 fe55cc7; the collect itself measures 26ms/trigger). bench.py's
-historical tip/catch-up gap (~1.26x) is this fixed cost on top of
-driver-time noise between runs — in the clean profiled run tip's wall
-BEAT catch-up (5.29s vs 5.57s). At a real chain tip (one block every
-~20s) a 150ms trigger cost is 0.75% duty cycle — not a bottleneck at
-any deployment scale.
+Per-trigger cost at the tip is measured by perfbench's ``tip_serve``
+workload: ``--trace 1`` reports ``streaming.trigger_ms_p50``,
+``streaming.add_batch_ms_p50`` and ``streaming.overhead_ms_p50`` (a
+trigger's time outside the foreachBatch body).
 
 Events are control-plane rows (a few per block, no payload); collecting
 one micro-batch of them to the driver is the bounded-inbox analogue

@@ -13,9 +13,10 @@ Each query is forced to full execution with the built-in ``noop`` sink
 transfer). A warmup pass on sf0.001 absorbs JVM/codegen start-up cost
 so per-query numbers reflect steady-state throughput.
 
-Also reports ``blocks_per_sec`` through the canonical UTxO-balance
-lifecycle graph (SURVEY §2.C) to mirror the reference's headline
-blocks/s metric (docs/design/unified-branch-batch-commit.md:40-42).
+Also reports ``blocks_per_sec_utxo_graph`` through the canonical
+UTxO-balance query graph (SURVEY §2.C). The indexer itself (the
+lifecycle driver and its streaming wrapper) has one benchmark,
+``perfbench/run.py``; nothing here drives it.
 
 Cross-round comparability note (r5-verdict regression attribution):
 the apparent r4 dedup slowdown (dedup_exact 0.41→0.63s,
@@ -37,7 +38,9 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -220,10 +223,9 @@ def _is_slow_bps(cur: float, prior: float | None,
     """The throughput twin of ``_is_slow_vs_prior`` (r13 verdict #1):
     a blocks/s leg is suspect when it falls below its prior by MORE
     than the measured host drift explains — cur < prior / (1.5 × hr),
-    hr floored at 1 so a faster host can't manufacture flags. For
-    same-run RATIO metrics (depth3_retention) pass host_ratio=1.0:
-    uniform drift cancels in the ratio, so the host factor must not
-    widen that guard."""
+    hr floored at 1 so a faster host can't manufacture flags. For a
+    same-run RATIO metric pass host_ratio=1.0: uniform drift cancels in
+    the ratio, so the host factor must not widen that guard."""
     return bool(prior) and cur * 1.5 * max(1.0, host_ratio) < prior
 
 
@@ -436,8 +438,8 @@ def main() -> None:
     # unstable — mostly ~12s but sporadically 85-350s at sf0.1, the
     # cached-relation reuse racing ContextCleaner cleanup of the prior
     # construction's broadcasts — while flushed repeats hold a steady
-    # ~15s and leave no accumulated state to distort the lifecycle
-    # metrics that follow. The timed number is therefore the cost of a
+    # ~15s and leave no accumulated state to distort the metrics that
+    # follow. The timed number is therefore the cost of a
     # fresh pipeline run — the driver-style cost a user actually pays.
     import gc as _gc
 
@@ -454,274 +456,62 @@ def main() -> None:
     cur_runs.sort()
     curation_wall = round(cur_runs[len(cur_runs) // 2], 3)
 
-    # Fresh host probe for the THROUGHPUT family: the lifecycle legs
-    # run many minutes after cal_start (the query sweep + curation sit
-    # between), and the r13 forensics measured within-session drift —
-    # normalizing these legs by the sweep-START ratio under-corrects a
-    # host that degrades mid-sweep (and over-corrects one that
-    # recovers). One probe triple taken HERE, at the section boundary,
-    # is the honest normalizer for every blocks/s leg below.
+    # Fresh host probe for the THROUGHPUT leg: it runs many minutes
+    # after cal_start (the query sweep + curation sit between), and the
+    # r13 forensics measured within-session drift — normalizing it by
+    # the sweep-START ratio under-corrects a host that degrades
+    # mid-sweep (and over-corrects one that recovers). One probe triple
+    # taken HERE, at the section boundary, is its honest normalizer.
     cal_lc = _calibration(spark)
     host_ratio_lc = round(_host_ratio(cal_lc, prior_cal), 4)
 
     # blocks/s through the canonical UTxO lifecycle graph (batch mode):
     # how many distinct slots (= blocks, FIXTURES §5) the §2.C pipeline
-    # processes per wall-second.
+    # processes per wall-second. The indexer itself is measured by
+    # perfbench/ alone.
     from argus_spark.sources.ingest import blocks_table
 
     n_blocks = blocks_table(spark, SF_DIR).count()
-    t0 = time.perf_counter()
-    _run(qs["watched_balances"](spark, SF_DIR))
-    utxo_wall = time.perf_counter() - t0
-    blocks_per_sec = round(n_blocks / utxo_wall, 1) if utxo_wall > 0 else 0.0
 
-    # Lifecycle throughput — the reference's headline metric (blocks/s
-    # through real reducers into a transactional sink; BASELINE.md:
-    # ~1,013 blk/s at BatchSize=500 into Postgres). Here: the 4-reducer
-    # example DAG through IndexDriver into the snapshot store, 2,000
-    # blocks per epoch (Spark's knee is bigger batches than Postgres's
-    # fsync knee), best-of-2 with a warmup run.
-    import shutil
-    import tempfile
+    def utxo_graph_bps() -> float:
+        t0 = time.perf_counter()
+        _run(qs["watched_balances"](spark, SF_DIR))
+        w = time.perf_counter() - t0
+        return round(n_blocks / w, 1) if w > 0 else 0.0
 
-    from argus_spark.chain.synth import synth_watched
-    from argus_spark.lifecycle.driver import ChainEvent, IndexDriver
-    from argus_spark.lifecycle.store import ParquetStateStore
-    from argus_spark.reducers.examples import build_example_registry
-    from argus_spark.sources.ingest import first_n_blocks
+    blocks_per_sec = utxo_graph_bps()
+
+    # Calibration-normalized guard (r13 verdict #1), the query-side
+    # confirmed_slow rule inverted for throughput: the leg is suspect
+    # when it falls below prior / (1.5 × host_ratio); a flagged leg
+    # re-runs once standalone with a fresh probe triple, and the record
+    # carries both numbers.
+    lifecycle_reruns: dict[str, dict] = {}
+    prior_bps = prior_full.get("blocks_per_sec_utxo_graph")
+    if _is_slow_bps(blocks_per_sec, prior_bps, host_ratio_lc):
+        flush_scoped()
+        _gc.collect()
+        clean_bps = utxo_graph_bps()
+        # Probe AFTER the clean leg (mirrors the query-side order): the
+        # CONFIRMED decision must be normalized by the host state of
+        # the interval the clean number was actually measured in.
+        cal_rr = _calibration(spark)
+        ratio_rr = round(_host_ratio(cal_rr, prior_cal), 4)
+        rec = {
+            "first": blocks_per_sec,
+            "clean": clean_bps,
+            "prior": prior_bps,
+            "cal_spin_s": cal_rr["python_spin_s"],
+            "host_ratio_at_rerun": ratio_rr,
+            "prior_normalized": round(prior_bps / max(1.0, ratio_rr), 1),
+        }
+        if _is_slow_bps(clean_bps, prior_bps, ratio_rr):
+            rec["confirmed_slow"] = True
+        blocks_per_sec = max(blocks_per_sec, clean_bps)
+        lifecycle_reruns["blocks_per_sec_utxo_graph"] = rec
 
     td = tempfile.mkdtemp(prefix="argus_bench_")
     try:
-        watched = synth_watched(spark, SF_DIR).cache()
-        watched.count()
-
-        def lc_run(n_lc: int, batch: int, tag: str, registry_fn=None) -> float:
-            # slot-threshold filter over the range-partitioned ingest
-            # table — per-epoch slot predicates prune at the file level
-            lc_blocks = first_n_blocks(spark, SF_DIR, n_lc)
-            slots = [
-                r.slot for r in lc_blocks.select("slot").orderBy("slot").collect()
-            ]
-            events = [ChainEvent("roll_forward", block_slot=s) for s in slots]
-            wall = float("inf")
-            # run 0 warms; best of the remaining 3 — host-scheduling
-            # noise measured up to 2x swings between identical runs on
-            # shared-host VMs, so 2 post-warm samples were not enough
-            for i in range(4):
-                store = ParquetStateStore(os.path.join(td, f"store_{tag}_{i}"))
-                reg = (
-                    registry_fn()
-                    if registry_fn
-                    else build_example_registry(spark, watched)
-                )
-                drv = IndexDriver(
-                    spark, reg, store, lc_blocks,
-                    batch_size=batch, max_delay_s=1e9, max_rollback_slots=10**12,
-                )
-                t0 = time.perf_counter()
-                drv.run(list(events))
-                # run 0 is the JIT/plan-cache warmup for this config's
-                # code paths (the reference's bench likewise reports
-                # steady-state after warmup, Bench/README.md); best of
-                # the remaining runs is the steady-state number.
-                if i > 0:
-                    wall = min(wall, time.perf_counter() - t0)
-            return round(n_lc / wall, 1)
-
-        # Reference shape (BASELINE.md): 220 blk/s per-block-commit →
-        # 1,013 blk/s at its batch-500 fsync knee. Spark's equivalent
-        # knee is bigger micro-batches (per-epoch job overhead amortizes
-        # where Postgres amortized fsyncs): report the same batch-500
-        # point for comparability plus the knee throughput.
-        lifecycle_bps_500 = lc_run(2000, 500, "b500")
-        lifecycle_bps = lc_run(20000, 20000, "knee")
-
-        # Depth (in)dependence — the reference's sequential cascade
-        # collapses ~30x on a 3-deep chain (274 vs 8,200 slots/s, Bench
-        # README.md:7; channels recover 2.92x). Lazy plan composition +
-        # concurrent sink writes should make Spark's throughput flat in
-        # depth; the ratio is the property BASELINE.md asks to reproduce.
-        from argus_spark.reducers.examples import build_chain_registry
-
-        depth1_bps = lc_run(10000, 10000, "d1", lambda: build_chain_registry(1))
-        depth3_bps = lc_run(10000, 10000, "d3", lambda: build_chain_registry(3))
-
-        # Streaming-mode lifecycle (Structured Streaming wrapper,
-        # SURVEY §3.1): same 2,000-block / batch-500 workload as the
-        # batch row, fed through readStream(feed dir) → foreachBatch →
-        # IndexDriver, with one mid-stream rollback — so the published
-        # numbers cover the full streaming path (source checkpointing,
-        # micro-batch triggers, reorg handling), not just the batch
-        # driver. Two A2 operating points: CATCH-UP (unbounded trigger
-        # — one micro-batch drains the whole feed; the throughput
-        # number comparable to the batch row) and TIP-FOLLOWING
-        # (maxFilesPerTrigger=1 — five 500-event triggers; measures
-        # the fixed per-trigger cost a live indexer pays at the tip).
-        from argus_spark.chain.synth import synth_chain_events
-        from argus_spark.sources.chain_feed import write_feed_file
-        from argus_spark.streaming.indexer import StreamingIndexer
-
-        n_stream = 2000
-        s_blocks = first_n_blocks(spark, SF_DIR, n_stream)
-        s_slots = [
-            r.slot for r in s_blocks.select("slot").orderBy("slot").collect()
-        ]
-        ev_rows = [
-            r.asDict()
-            for r in synth_chain_events(
-                spark, SF_DIR,
-                rollbacks=[(1200, s_slots[1100], "exclusive")],
-                limit=n_stream,
-            ).orderBy("seq").collect()
-        ]
-        def stream_run(tag: str, mfpt: int | None) -> tuple[float, int]:
-            best_wall, batches = float("inf"), 0
-            for i in range(3):  # run 0 warms (JIT + streaming-source setup)
-                feed = os.path.join(td, f"feed_{tag}_{i}")
-                for fi in range(0, len(ev_rows), 500):
-                    write_feed_file(feed, fi // 500, ev_rows[fi : fi + 500])
-                store = ParquetStateStore(os.path.join(td, f"st_{tag}_{i}"))
-                si = StreamingIndexer(
-                    spark, build_example_registry(spark, watched), store,
-                    s_blocks, feed, os.path.join(td, f"ck_{tag}_{i}"),
-                    batch_size=500, max_files_per_trigger=mfpt,
-                )
-                t0 = time.perf_counter()
-                s_stats = si.run_available_now()
-                wall = time.perf_counter() - t0
-                if i > 0 and wall < best_wall:
-                    best_wall, batches = wall, s_stats.micro_batches
-            return round(n_stream / best_wall, 1), batches
-
-        streaming_bps, _ = stream_run("catchup", None)
-        streaming_tip_bps, stream_batches = stream_run("tip", 1)
-
-        # Calibration-normalized guard for the THROUGHPUT family
-        # (r13 verdict #1): the query side has had a normalized
-        # confirmed_slow guard + isolation reruns since r12, but the
-        # blocks/s legs and depth3_retention had NEITHER — the r13
-        # artifact committed retention 0.45 against a 0.88-1.01
-        # history with no in-artifact adjudication. Same rule,
-        # inverted for throughput: a leg is suspect when it falls
-        # below prior / (1.5 × host_ratio); a flagged leg re-runs
-        # once standalone with a fresh probe triple, and the record
-        # carries both numbers. Retention is a same-run RATIO (host
-        # drift largely cancels), so its flag skips the host factor
-        # and a flagged retention re-runs BOTH depth legs.
-        bps_vals = {
-            "blocks_per_sec_utxo_graph": blocks_per_sec,
-            "blocks_per_sec_lifecycle_batch500": lifecycle_bps_500,
-            "blocks_per_sec_lifecycle": lifecycle_bps,
-            "blocks_per_sec_depth1_chain": depth1_bps,
-            "blocks_per_sec_depth3_chain": depth3_bps,
-            "blocks_per_sec_streaming": streaming_bps,
-            "blocks_per_sec_streaming_tip": streaming_tip_bps,
-        }
-
-        def _utxo_graph_rerun() -> float:
-            t0 = time.perf_counter()
-            _run(qs["watched_balances"](spark, SF_DIR))
-            w = time.perf_counter() - t0
-            return round(n_blocks / w, 1) if w > 0 else 0.0
-
-        bps_legs = {
-            "blocks_per_sec_utxo_graph": _utxo_graph_rerun,
-            "blocks_per_sec_lifecycle_batch500":
-                lambda: lc_run(2000, 500, "b500r"),
-            "blocks_per_sec_lifecycle": lambda: lc_run(20000, 20000, "kneer"),
-            "blocks_per_sec_depth1_chain":
-                lambda: lc_run(10000, 10000, "d1r",
-                               lambda: build_chain_registry(1)),
-            "blocks_per_sec_depth3_chain":
-                lambda: lc_run(10000, 10000, "d3r",
-                               lambda: build_chain_registry(3)),
-            "blocks_per_sec_streaming":
-                lambda: stream_run("catchupr", None)[0],
-            "blocks_per_sec_streaming_tip": lambda: stream_run("tipr", 1)[0],
-        }
-        # Capture the first-pass depth pair BEFORE the per-leg guard
-        # can adopt isolation-rerun values: retention must always be
-        # the ratio of legs measured back-to-back in the same interval.
-        d1_first = bps_vals["blocks_per_sec_depth1_chain"]
-        d3_first = bps_vals["blocks_per_sec_depth3_chain"]
-        lifecycle_reruns: dict[str, dict] = {}
-        for key in bps_vals:
-            prior_bps = prior_full.get(key)
-            if not _is_slow_bps(bps_vals[key], prior_bps, host_ratio_lc):
-                continue
-            import gc as _gc1
-
-            flush_scoped()
-            _gc1.collect()
-            clean_bps = bps_legs[key]()
-            # Probe AFTER the clean leg (mirrors the query-side order,
-            # bench.py:358): the CONFIRMED decision must be normalized
-            # by the host state of the interval the clean number was
-            # actually measured in — probing before would let a
-            # contended instant at flag time loosen the threshold for
-            # a rerun that then executes on a recovered host.
-            cal_rr = _calibration(spark)
-            ratio_rr = round(_host_ratio(cal_rr, prior_cal), 4)
-            rec = {
-                "first": bps_vals[key],
-                "clean": clean_bps,
-                "prior": prior_bps,
-                "cal_spin_s": cal_rr["python_spin_s"],
-                "host_ratio_at_rerun": ratio_rr,
-                "prior_normalized": round(
-                    prior_bps / max(1.0, ratio_rr), 1
-                ),
-            }
-            if _is_slow_bps(clean_bps, prior_bps, ratio_rr):
-                rec["confirmed_slow"] = True
-            if clean_bps > bps_vals[key]:
-                bps_vals[key] = clean_bps
-            lifecycle_reruns[key] = rec
-        (blocks_per_sec, lifecycle_bps_500, lifecycle_bps, depth1_bps,
-         depth3_bps, streaming_bps, streaming_tip_bps) = (
-            bps_vals["blocks_per_sec_utxo_graph"],
-            bps_vals["blocks_per_sec_lifecycle_batch500"],
-            bps_vals["blocks_per_sec_lifecycle"],
-            bps_vals["blocks_per_sec_depth1_chain"],
-            bps_vals["blocks_per_sec_depth3_chain"],
-            bps_vals["blocks_per_sec_streaming"],
-            bps_vals["blocks_per_sec_streaming_tip"],
-        )
-        # Retention is the ratio of a SAME-RUN pair — the first-pass
-        # (d1, d3) legs ran back-to-back, so that pair (NOT the
-        # post-keep-best values, which can mix a first-pass leg with
-        # an isolation-rerun leg from a different interval) is the
-        # first-pass retention. A flagged retention re-runs BOTH legs
-        # back-to-back (isolated, like every other rerun) and the
-        # committed retention is the better of the two same-run pair
-        # ratios; the per-LEG committed values keep their own
-        # keep-best policy independently — the clean pair never
-        # replaces a healthier first-pass leg downward.
-        retention = (
-            round(d3_first / d1_first, 3) if d1_first else 0.0
-        )
-        prior_ret = prior_full.get("depth3_retention")
-        if _is_slow_bps(retention, prior_ret, 1.0):
-            import gc as _gc2
-
-            flush_scoped()
-            _gc2.collect()
-            d1c = lc_run(10000, 10000, "d1rr",
-                         lambda: build_chain_registry(1))
-            d3c = lc_run(10000, 10000, "d3rr",
-                         lambda: build_chain_registry(3))
-            ret_c = round(d3c / d1c, 3) if d1c else 0.0
-            rec = {"first": retention, "clean": ret_c, "prior": prior_ret,
-                   "first_depth1": d1_first, "first_depth3": d3_first,
-                   "clean_depth1": d1c, "clean_depth3": d3c}
-            if _is_slow_bps(ret_c, prior_ret, 1.0):
-                rec["confirmed_slow"] = True
-            if ret_c > retention:
-                retention = ret_c
-            depth1_bps = max(depth1_bps, d1c)
-            depth3_bps = max(depth3_bps, d3c)
-            lifecycle_reruns["depth3_retention"] = rec
-
         # Incremental-delta stored-index probe (r11 verdict #3): the
         # same daily-shard candidate query via (a) the recompute path
         # (base signatures re-derived from documents per run) vs (b) the
@@ -778,8 +568,6 @@ def main() -> None:
             lambda: embedding_incremental_delta_stored(spark, SF_DIR, etbl)
         )
         spark.sql(f"DROP TABLE IF EXISTS {etbl}")
-
-        watched.unpersist()
     finally:
         shutil.rmtree(td, ignore_errors=True)
 
@@ -795,39 +583,16 @@ def main() -> None:
         "sf": sf,
         "curation_pipeline_wall": curation_wall,
         "blocks_per_sec_utxo_graph": blocks_per_sec,
-        "blocks_per_sec_lifecycle": lifecycle_bps,
-        "blocks_per_sec_lifecycle_batch500": lifecycle_bps_500,
-        "blocks_per_sec_streaming": streaming_bps,
-        "blocks_per_sec_streaming_tip": streaming_tip_bps,
-        "streaming_tip_micro_batches": stream_batches,
         "delta_probe_ms_recompute": delta_recompute_ms,
         "delta_probe_ms_stored_index": delta_stored_ms,
         "emb_delta_probe_ms_recompute": emb_delta_recompute_ms,
         "emb_delta_probe_ms_stored_index": emb_delta_stored_ms,
-        "blocks_per_sec_depth1_chain": depth1_bps,
-        "blocks_per_sec_depth3_chain": depth3_bps,
-        "depth3_retention": retention,
         "n_blocks": n_blocks,
         # host-normalized throughput (raw × host_ratio floored at 1):
-        # the values comparable to PRIOR rounds' committed legs —
-        # r13 verdict #1's missing adjudication dimension. Normalized
-        # by the LIFECYCLE-SECTION probe ratio (taken at the section
-        # boundary, minutes after cal_start — within-session drift is
-        # exactly what the r13 forensics measured), not the sweep-start
-        # one. Abbrevs: utxo graph / batch-500 / knee /
-        # depth-1 / depth-3 / streaming catch-up / streaming tip.
-        "bps_norm": {
-            k: _norm_bps(v, host_ratio_lc)
-            for k, v in (
-                ("utxo", blocks_per_sec),
-                ("b500", lifecycle_bps_500),
-                ("knee", lifecycle_bps),
-                ("d1", depth1_bps),
-                ("d3", depth3_bps),
-                ("stream", streaming_bps),
-                ("tip", streaming_tip_bps),
-            )
-        },
+        # the value comparable to PRIOR rounds' committed leg — r13
+        # verdict #1's missing adjudication dimension. Normalized by the
+        # section-boundary probe ratio, not the sweep-start one.
+        "bps_norm": {"utxo": _norm_bps(blocks_per_sec, host_ratio_lc)},
         "lc_confirmed_slow": sum(
             1 for r in lifecycle_reruns.values() if r.get("confirmed_slow")
         ),
@@ -857,8 +622,8 @@ def main() -> None:
             # the factor every QUERY-side confirmed_slow comparison
             # was normalized by (BENCH_SCALE.md "Calibration-
             # normalized flags" documents the formula) — plus the
-            # lifecycle-section probe triple and ratio that normalize
-            # the THROUGHPUT family (taken at that section's boundary)
+            # section-boundary probe triple and ratio that normalize
+            # the THROUGHPUT leg
             "ratio": host_ratio,
             "pyl": cal_lc["python_spin_s"],
             "spl": cal_lc["spark_probe_s"],
@@ -883,15 +648,13 @@ def main() -> None:
         # staged shrink (r8: the headline grew past what 2-digit
         # medians alone can fit): drop diagnostic-only keys from the
         # STDOUT line — they stay in bench_full.json — keeping the
-        # judge-facing essentials (per-query medians + the baseline
-        # lifecycle/streaming rows).
+        # judge-facing essentials (per-query medians + the UTxO-graph
+        # throughput row).
         for k in (
-            "streaming_tip_micro_batches",
             "delta_probe_ms_recompute",
             "delta_probe_ms_stored_index",
             "emb_delta_probe_ms_recompute",
             "emb_delta_probe_ms_stored_index",
-            "blocks_per_sec_depth1_chain",
             "n_blocks",
         ):
             out.pop(k, None)

@@ -97,9 +97,8 @@ class TestNormalizedFlag:
 
 class TestThroughputFlag:
     """_is_slow_bps — the blocks/s twin of the wall-time guard
-    (r13 verdict #1: the family that carried the unadjudicated 0.45
-    retention). Throughput inverts: slower host ⇒ LOWER blocks/s is
-    expected, so the prior is divided by the ratio, not multiplied."""
+    (r13 verdict #1). Throughput inverts: slower host ⇒ LOWER blocks/s
+    is expected, so the prior is divided by the ratio, not multiplied."""
 
     def test_drifted_host_produces_zero_flags(self):
         from bench import _is_slow_bps
@@ -129,9 +128,9 @@ class TestThroughputFlag:
     def test_ratio_metric_uses_unit_host_factor(self):
         from bench import _is_slow_bps
 
-        # retention is a same-run ratio — host drift cancels, so the
-        # caller passes host_ratio=1.0: the r13 artifact (0.45 against
-        # a 0.876 prior) MUST flag under that rule
+        # a same-run ratio metric — host drift cancels, so the caller
+        # passes host_ratio=1.0: a ratio near half its prior (0.45
+        # against 0.876) MUST flag under that rule
         assert _is_slow_bps(0.45, 0.876, 1.0)
         # ...and a mild dip must not
         assert not _is_slow_bps(0.80, 0.876, 1.0)

@@ -204,6 +204,56 @@ class TestStoreHygiene:
         assert seen[0] == -1 and seen[-1] == cut
         assert max(slots) > cut  # the overstated value the tip must not take
 
+    def test_epoch_commit_reads_the_manifest_twice(self, spark, tmp_path, monkeypatch):
+        """One epoch reads the manifest twice: its pinned snapshot and
+        the read under the publish lock. The checkpoint rows' fixed
+        fields come from the driver, so the commit reads nothing more;
+        created_at is stamped at a reducer's first commit and survives
+        later epochs, a rewind and a fresh driver's resume."""
+        from argus_spark.chain.synth import synth_blocks
+        from argus_spark.lifecycle.driver import ChainEvent, IndexDriver
+        from argus_spark.lifecycle.store import ParquetStateStore
+        from tests.conftest import SF_SMOKE
+
+        blocks = synth_blocks(spark, SF_SMOKE)
+        slots = sorted(r.slot for r in blocks.select("slot").collect())[:30]
+        reg = ReducerRegistry()
+        reg.register(
+            Reducer("blk", lambda ctx: {"blk_t": ctx.blocks.select("slot")},
+                    tables=["blk_t"])
+        )
+        store = ParquetStateStore(str(tmp_path / "s"))
+
+        def driver():
+            return IndexDriver(
+                spark, reg, store, blocks, batch_size=10, max_delay_s=1e9
+            )
+
+        def feed(ss):
+            return [ChainEvent("roll_forward", block_slot=s) for s in ss]
+
+        d = driver()
+        reads: list[int] = []
+        real = ParquetStateStore.current_manifest
+
+        def counting(self):
+            reads.append(1)
+            return real(self)
+
+        monkeypatch.setattr(ParquetStateStore, "current_manifest", counting)
+        d.run(feed(slots[:10]))
+        assert d.stats.epochs == 1
+        assert len(reads) == 2
+
+        created = store.reducer_states()["blk"].created_at
+        d.run(feed(slots[10:20]))
+        d.rewind_to(slots[15])
+        d2 = driver()
+        d2.run(feed(slots[15:30]))
+        st = store.reducer_states()["blk"]
+        assert st.resume_slot == slots[29]
+        assert st.created_at == created
+
     def test_compaction_and_commit_publish_concurrently(self, spark, tmp_path):
         """MultiRootDriver(compact_every=N) can compact one root's table
         while another root commits to the same store. Compaction reads

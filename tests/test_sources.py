@@ -82,3 +82,38 @@ def test_register_sql_views_full_surface(spark):
     assert got == want
     # events view is timestamp-normalized (the nanosAsLong gotcha)
     assert dict(spark.sql("SELECT ts FROM events").dtypes)["ts"] == "timestamp"
+
+
+def test_feed_file_in_progress_is_invisible_to_the_file_source(
+    spark, tmp_path, monkeypatch
+):
+    """A feed file being written is never listed by Spark's file source:
+    a stream triggering mid-write would read its partial lines as rows
+    with null ``seq``/``action`` and read the renamed file again later.
+    Checked at the last moment before the atomic rename."""
+    import re
+
+    from argus_spark.schemas import CHAIN_EVENTS
+    from argus_spark.sources import chain_feed
+
+    feed = str(tmp_path / "feed")
+    ev = [{"seq": 0, "action": "roll_forward", "block_slot": 1}]
+    chain_feed.write_feed_file(feed, 0, ev)
+
+    real_replace = chain_feed.os.replace
+    listed: list[list[str]] = []
+
+    def replace(src, dst):
+        listed.append(
+            spark.read.schema(CHAIN_EVENTS).json(feed).inputFiles()
+        )
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(chain_feed.os, "replace", replace)
+    chain_feed.write_feed_file(feed, 1, [dict(ev[0], seq=1, block_slot=2)])
+    assert len(listed) == 1
+    names = sorted(os.path.basename(f) for f in listed[0])
+    assert names == ["feed-00000000.json"], names
+    after = spark.read.schema(CHAIN_EVENTS).json(feed).inputFiles()
+    assert all(re.fullmatch(r"feed-\d{8}\.json", os.path.basename(f)) for f in after)
+    assert len(after) == 2
