@@ -6,8 +6,12 @@ A reducer is a named transform applied per epoch:
 
 Every appended row MUST carry a ``slot`` column — the universal
 rollback key (src/Argus.Sync/Data/Models/IReducerModel.cs:8-11).
-Retraction is automatic: the engine deletes ``slot >= X`` from every
-table the reducer owns.
+A reducer owns the tables it declares in ``tables``, and only those:
+it may write no other table, no two reducers of a registry may declare
+the same one, and the engine retracts (deletes ``slot >= X``) and
+compacts exactly the declared tables — Argus's per-reducer
+``RollBackwardAsync`` over the models each reducer writes
+(IReducer.cs:16-37).
 
 Dependencies form a single-parent DAG (DependsOnAttribute.cs:8); roots
 get their own processing chain; children run after parents within the
@@ -48,7 +52,10 @@ class Reducer:
     # an undeclared cross-read sees that table as of the previous
     # commit).
     depends_on: str | None = None
-    tables: list[str] = field(default_factory=list)  # owned output tables
+    # The tables this reducer owns: the driver writes, retracts and
+    # compacts exactly these. `apply` returning any other table is an
+    # error, and a reducer with no tables writes nothing.
+    tables: list[str] = field(default_factory=list)
 
 
 class ReducerRegistry:
@@ -64,6 +71,12 @@ class ReducerRegistry:
             raise GraphError("reducer name must be non-empty")
         if reducer.name in self._reducers:
             raise GraphError(f"duplicate reducer name: {reducer.name}")
+        for other in self._reducers.values():
+            if shared := set(reducer.tables) & set(other.tables):
+                raise GraphError(
+                    f"tables {sorted(shared)} declared by both "
+                    f"{other.name!r} and {reducer.name!r}"
+                )
         self._reducers[reducer.name] = reducer
         return self
 

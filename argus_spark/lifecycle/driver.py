@@ -20,9 +20,9 @@ epoch. Argus defers such commits to the next data-bearing one
 deferred checkpoint had to be republished by a commit at run end.
 
 Rollback (A12): commit the open batch first (pre-fork blocks are
-valid), then one atomic retraction commit — every table loses
-``slot >= X``, every window rewinds — in topo order semantics but a
-single manifest publish.
+valid), then one atomic retraction commit — every reducer's declared
+tables lose ``slot >= X``, every window rewinds — in topo order
+semantics but a single manifest publish.
 
 Resume (A14/A15): per-reducer skip slots from committed checkpoints;
 a fresh dependent starts at its parent's position instead of genesis;
@@ -50,7 +50,7 @@ from __future__ import annotations
 
 import itertools
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -284,14 +284,11 @@ class IndexDriver:
                     "after view-namespace sanitization; rename one"
                 )
             sanitized[s] = r.name
-        # in-memory checkpoint windows, loaded from the committed manifest
-        self._windows: dict[str, list[Point]] = {}
-        self._resume: dict[str, int] = {}
-        # the checkpoint rows' fixed fields, also loaded once: a commit
-        # never re-reads the store for them. created_at stays None until
-        # the reducer's first commit stamps it.
-        self._created_at: dict[str, float | None] = {}
-        self._start_point: dict[str, dict | None] = {}
+        # each reducer's last committed checkpoint row, in topo order,
+        # loaded once: a commit never re-reads the store for it, and the
+        # driver replaces it only once a commit has published.
+        # created_at stays None until the reducer's first commit.
+        self._committed: dict[str, ReducerStateRow] = {}
         # pools created lazily at first flush (tests build many drivers
         # that never run); threads are reaped by executor atexit
         self._ctl_pool_ = None
@@ -326,29 +323,26 @@ class IndexDriver:
     def _load_state(self) -> None:
         states = self.store.reducer_states()
         for r in self._order:
-            st = states.get(r.name)
-            self._windows[r.name] = st.window() if st else []
-            self._created_at[r.name] = st.created_at if st else None
-            self._start_point[r.name] = st.start_point if st else None
-        for r in self._order:
-            st = states.get(r.name)
+            st = states.get(r.name) or ReducerStateRow(
+                r.name, created_at=None, start_point=None
+            )
             # exact committed floor: persisted resume cursor, falling back
             # to the window's newest point (pre-cursor manifests)
-            mine = st.resume_slot if st else -1
-            wlatest = latest_slot(self._windows[r.name])
+            mine = st.resume_slot
+            wlatest = latest_slot(st.window())
             if wlatest is not None:
                 mine = max(mine, wlatest)
             if mine < 0 and r.depends_on is not None:
                 # A14 — fresh dependent of a synced parent starts at the
                 # parent's position, not genesis (StartPoints.cs:98-180)
-                mine = self._resume.get(r.depends_on, -1)
-            self._resume[r.name] = mine
+                mine = self._committed[r.depends_on].resume_slot
+            self._committed[r.name] = replace(st, resume_slot=mine)
 
     def graph_resume_slot(self) -> int:
         """A15 — safe intersection: min of members' committed floors.
         Blocks at or below this are skipped on replay (idempotent
         at-least-once → exactly-once effect, B41)."""
-        floors = [self._resume[r.name] for r in self._order]
+        floors = [st.resume_slot for st in self._committed.values()]
         return min(floors) if floors else -1
 
     # ---------------- main loop ----------------
@@ -388,7 +382,7 @@ class IndexDriver:
                 ev = ChainEvent.from_row(ev)
             if ev.action == "roll_forward":
                 if ev.block_slot is None:
-                    continue
+                    raise ValueError("roll_forward event without a block_slot")
                 if ev.block_slot <= graph_floor and not pending:
                     # replayed block below every member's checkpoint
                     self.stats.skipped += 1
@@ -458,7 +452,7 @@ class IndexDriver:
         tips_fut = self._ctl_pool.submit(_tips)
 
         def _apply_one(r: Reducer) -> tuple[str, dict[str, DataFrame], float]:
-            floor = resume_before[r.name]
+            floor = self._committed[r.name].resume_slot
             my_blocks = blocks.filter(F.col("slot") > floor) if floor >= lo else blocks
             ctx = ReducerContext(
                 self.spark, self.store, my_blocks, pending, (lo, hi),
@@ -466,9 +460,12 @@ class IndexDriver:
             )
             t = time.monotonic()
             outputs = r.apply(ctx) or {}
+            if stray := set(outputs) - set(r.tables):
+                raise ValueError(
+                    f"reducer {r.name!r} wrote undeclared tables {sorted(stray)}"
+                )
             return r.name, outputs, time.monotonic() - t
 
-        resume_before = dict(self._resume)
         try:
             # Plan building runs LEVEL-parallel: reducers in one topo
             # level are independent (a child only ever reads declared
@@ -519,17 +516,22 @@ class IndexDriver:
                     df = df.unionByName(d)
                 appends[tbl] = (df, lo, hi)
 
+            rows: dict[str, ReducerStateRow] = {}
+
             def _states() -> dict[str, ReducerStateRow]:
-                # runs inside store.commit after the data writes land
+                # runs inside store.commit after the data writes land;
+                # the driver adopts the rows only once the commit returns
                 tip_points = tips_fut.result()
-                for r in self._order:
-                    w = self._windows[r.name]
+                windows, resume = {}, {}
+                for name, st in self._committed.items():
+                    w = st.window()
                     for p in tip_points:
-                        if p.slot > resume_before[r.name]:
+                        if p.slot > st.resume_slot:
                             w = window_roll_forward(w, p, self.window_k)
-                    self._windows[r.name] = w
-                    self._resume[r.name] = max(resume_before[r.name], hi)
-                return self._state_rows()
+                    windows[name] = w
+                    resume[name] = max(st.resume_slot, hi)
+                rows.update(self._state_rows(windows, resume))
+                return rows
 
             # Size output files to the epoch, not the session: a 500-
             # block epoch's outputs fit one row-group — writing them as
@@ -555,6 +557,7 @@ class IndexDriver:
                 write_parts=min(natural, width_cap),
                 write_shuffle=natural > width_cap,
             )
+            self._committed.update(rows)
         finally:
             for df in cached_out:
                 df.unpersist()
@@ -574,46 +577,39 @@ class IndexDriver:
         O(reorg depth) while read amplification and file fan-out stay
         bounded in chain length — the Delta/Iceberg OPTIMIZE analogue,
         commit-atomic via the same manifest publish."""
-        tip = max((self._resume[r.name] for r in self._order), default=-1)
+        tip = max((st.resume_slot for st in self._committed.values()), default=-1)
         horizon = tip - self.max_rollback_slots
         if horizon <= 0:
             return
-        for tbl in self._owned_tables():
+        for tbl in (t for r in self._order for t in r.tables):
             if len(self.store.table_groups(tbl)) >= self.compact_min_groups:
                 self.store.compact(self.spark, tbl, upto_slot=horizon)
         self.store.vacuum()
 
-    def _owned_tables(self) -> list[str]:
-        """The tables this driver retracts and compacts: its reducers'
-        declared tables, or every table in the store when some reducer
-        declares none. Per-root processors share a store but roll back
-        and compact independently (the reference runs one chain
-        connection per root subgraph), so a driver whose reducers all
-        declare ownership never touches another root's tables."""
-        if all(r.tables for r in self._order):
-            return [t for r in self._order for t in r.tables]
-        return list(self.store.current_manifest()["tables"])
-
-    def _state_rows(self) -> dict[str, ReducerStateRow]:
-        out = {}
-        for r in self._order:
-            if self._created_at[r.name] is None:
-                self._created_at[r.name] = time.time()
-            out[r.name] = ReducerStateRow(
-                name=r.name,
-                created_at=self._created_at[r.name],
-                start_point=self._start_point[r.name],
-                latest_points=[p.as_dict() for p in self._windows[r.name]],
-                resume_slot=self._resume[r.name],
+    def _state_rows(
+        self, windows: dict[str, list[Point]], resume: dict[str, int]
+    ) -> dict[str, ReducerStateRow]:
+        """The checkpoint rows a commit publishes. The driver takes them
+        as its state only after the commit returns: a commit that raises
+        leaves windows, cursors and ``created_at`` as they were, so a
+        retry on the same driver replays the unpublished blocks."""
+        now = time.time()
+        return {
+            name: replace(
+                st,
+                created_at=now if st.created_at is None else st.created_at,
+                latest_points=[p.as_dict() for p in windows[name]],
+                resume_slot=resume[name],
             )
-        return out
+            for name, st in self._committed.items()
+        }
 
     # ---------------- rollback (A5, A12, A16, A17) ----------------
 
     def _apply_rollback(self, ev: ChainEvent) -> None:
         delete_from = normalize_rollback(ev.rollback_slot, ev.rollback_type)
         current = max(
-            (self._resume[r.name] for r in self._order), default=-1
+            (st.resume_slot for st in self._committed.values()), default=-1
         )
         check_rollback_depth(
             current if current >= 0 else None, delete_from, self.max_rollback_slots
@@ -631,8 +627,8 @@ class IndexDriver:
         exclude: list[str] | None = None,
     ) -> None:
         """A17 operator rewind / A12 reorg retraction: one atomic commit
-        deleting ``slot >= delete_from`` from every table this driver
-        owns (see :meth:`_owned_tables`) + rewound windows.
+        deleting ``slot >= delete_from`` from every reducer's declared
+        tables + rewound windows.
 
         ``overrides`` / ``exclude`` are the reference's rollback-mode
         per-reducer controls (CardanoIndexWorker.cs:181-202, 256-261):
@@ -644,10 +640,9 @@ class IndexDriver:
         minimum floor (A15) and deeper-rewound reducers replay while
         their siblings skip already-applied blocks (per-reducer floor
         filter in _flush) — the same mechanics as dependent start-point
-        adjustment. Requires declared table ownership when overrides or
-        exclusions are used (tables of excluded reducers must be
-        distinguishable from the rest). The spec is checked before any
-        window or cursor moves, so a rejected rewind changes nothing."""
+        adjustment. The driver adopts the rewound windows and cursors
+        only once the commit publishes, so a rejected spec or a failed
+        commit changes nothing."""
         overrides = dict(overrides or {})
         excluded = set(exclude or ())
         known = {r.name for r in self._order}
@@ -656,35 +651,26 @@ class IndexDriver:
             raise ValueError(f"unknown reducers in rewind spec: {sorted(unknown)}")
         if dup := set(overrides) & excluded:
             raise ValueError(f"reducers both overridden and excluded: {sorted(dup)}")
-        if (overrides or excluded) and not all(r.tables for r in self._order):
-            raise ValueError(
-                "per-reducer rewind overrides/exclusions require every "
-                "reducer to declare table ownership"
-            )
         # effective per-reducer cut
         eff = {
             r.name: overrides.get(r.name, delete_from)
             for r in self._order
             if r.name not in excluded
         }
-        if overrides or excluded:
-            cuts = {
-                t: eff[r.name] for r in self._order if r.name in eff for t in r.tables
-            }
-        else:
-            cuts = dict.fromkeys(self._owned_tables(), delete_from)
-        for r in self._order:
-            if r.name not in eff:
-                continue
-            cut = eff[r.name]
-            self._windows[r.name] = window_roll_back(
-                self._windows[r.name], cut, self.window_k
-            )
-            self._resume[r.name] = min(self._resume[r.name], cut - 1)
+        cuts = {
+            t: eff[r.name] for r in self._order if r.name in eff for t in r.tables
+        }
+        windows = {n: st.window() for n, st in self._committed.items()}
+        resume = {n: st.resume_slot for n, st in self._committed.items()}
+        for name, cut in eff.items():
+            windows[name] = window_roll_back(windows[name], cut, self.window_k)
+            resume[name] = min(resume[name], cut - 1)
+        rows = self._state_rows(windows, resume)
         self.store.commit(
             appends={},
-            states=self._state_rows,
+            states=lambda: rows,
             retract_from=cuts,
             spark=self.spark,
             meta=meta or {"rollback_to": delete_from},
         )
+        self._committed.update(rows)

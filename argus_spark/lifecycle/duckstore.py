@@ -62,7 +62,12 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from argus_spark.lifecycle.store import FileGroup, ReducerStateRow, write_width
+from argus_spark.lifecycle.store import (
+    FileGroup,
+    ReducerStateRow,
+    checkpoint_errors,
+    write_width,
+)
 
 
 def _q(name: str) -> str:
@@ -428,15 +433,7 @@ class DuckDBStateStore:
                 checked += 1
                 if name not in real:
                     errors.append(f"cataloged table missing from db: {name}")
-        for name, st in self.reducer_states().items():
-            slots = [p.slot for p in st.window()]
-            if any(a <= b for a, b in zip(slots, slots[1:])):
-                errors.append(f"state {name}: window not strictly descending")
-            if slots and st.resume_slot < slots[0]:
-                errors.append(
-                    f"state {name}: resume {st.resume_slot} behind newest "
-                    f"window point {slots[0]}"
-                )
+        errors += checkpoint_errors(self.reducer_states())
         with self._stage_lock:
             inflight = set(self._inflight_stages)
         orphans: list[str] = []

@@ -18,14 +18,13 @@ from properties the store/driver already provide:
     subgraphs' commits and states in the shared manifest don't confuse
     it;
   * rollback retraction and scheduled compaction are scoped to the
-    subgraph's declared tables, so one chain's reorg never deletes a
-    different subgraph's rows, and one root's maintenance never merges
-    (and so never vacuums) groups another root's open epoch still
-    reads — the per-root chain-connection semantics.
-
-Reducer table ownership must be declared (``Reducer.tables``) and
-disjoint across subgraphs — the same invariant the reference imposes by
-construction (each reducer writes its own models).
+    subgraph's declared tables (``Reducer.tables``), and the registry
+    rejects a table declared by two reducers, so one chain's reorg
+    never deletes a different subgraph's rows, and one root's
+    maintenance never merges (and so never vacuums) groups another
+    root's open epoch still reads — the per-root chain-connection
+    semantics, the invariant the reference imposes by construction
+    (each reducer writes its own models).
 """
 
 from __future__ import annotations
@@ -70,24 +69,9 @@ class MultiRootDriver:
         roots = registry.roots()
         if not roots:
             raise GraphError("registry has no roots")
-        owned: dict[str, str] = {}
         self.drivers: dict[str, IndexDriver] = {}
         for root in roots:
-            members = registry.subgraph_of(root.name)
-            sub = registry.with_allowlist(members)
-            for r in sub:
-                if not r.tables:
-                    raise GraphError(
-                        f"multi-root processing requires declared table "
-                        f"ownership; reducer {r.name!r} declares none"
-                    )
-                for t in r.tables:
-                    if t in owned:
-                        raise GraphError(
-                            f"table {t!r} owned by both {owned[t]!r} and "
-                            f"{root.name!r} subgraphs"
-                        )
-                    owned[t] = root.name
+            sub = registry.with_allowlist(registry.subgraph_of(root.name))
             kw = dict(driver_kwargs)
             kw.update((kwargs_by_root or {}).get(root.name, {}))
             self.drivers[root.name] = IndexDriver(

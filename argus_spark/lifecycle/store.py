@@ -90,7 +90,7 @@ class FileGroup:
 @dataclass
 class ReducerStateRow:
     name: str
-    created_at: float
+    created_at: float | None
     start_point: dict | None
     latest_points: list[dict] = field(default_factory=list)
     # exact committed floor (slot of the last applied block). The rolling
@@ -102,6 +102,23 @@ class ReducerStateRow:
 
     def window(self) -> list[Point]:
         return [Point.from_dict(p) for p in self.latest_points]
+
+
+def checkpoint_errors(states: dict[str, ReducerStateRow]) -> list[str]:
+    """The checkpoint invariants both stores' ``fsck`` audits, per
+    reducer: window slots strictly descending, resume cursor at or past
+    the newest window point (A13's normal form)."""
+    errors = []
+    for name, st in states.items():
+        slots = [p.slot for p in st.window()]
+        if any(a <= b for a, b in zip(slots, slots[1:])):
+            errors.append(f"state {name}: window not strictly descending")
+        if slots and st.resume_slot < slots[0]:
+            errors.append(
+                f"state {name}: resume {st.resume_slot} behind newest "
+                f"window point {slots[0]}"
+            )
+    return errors
 
 
 class ParquetStateStore:
@@ -552,15 +569,7 @@ class ParquetStateStore:
                             f"{table}: {g.path} slots [{stat['lo']},{stat['hi']}]"
                             f" outside recorded [{g.min_slot},{g.max_slot}]"
                         )
-        for name, st in self.reducer_states().items():
-            slots = [p.slot for p in st.window()]
-            if any(a <= b for a, b in zip(slots, slots[1:])):
-                errors.append(f"state {name}: window not strictly descending")
-            if slots and st.resume_slot < slots[0]:
-                errors.append(
-                    f"state {name}: resume {st.resume_slot} behind newest "
-                    f"window point {slots[0]}"
-                )
+        errors += checkpoint_errors(self.reducer_states())
         live = {
             g["path"] for groups in manifest["tables"].values() for g in groups
         }

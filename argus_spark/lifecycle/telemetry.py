@@ -9,11 +9,6 @@ engine's own operators can query (avg time per reducer = B22, latest
 slot = B20, progress vs tip = slot arithmetic B36) — the dashboard is
 just a DataFrame away, and at scale the rows can be appended to a
 metrics table like any other sink.
-
-Streaming side: :func:`attach_query_listener` registers a
-``StreamingQueryListener`` that folds micro-batch progress events into
-the same rows (the Spark-native analogue of the worker's background
-telemetry task).
 """
 
 from __future__ import annotations
@@ -150,31 +145,3 @@ def render_dashboard(
         )
     return "\n".join(lines)
 
-
-def attach_query_listener(spark: SparkSession, telemetry: Telemetry):
-    """Register a StreamingQueryListener that folds micro-batch progress
-    into the telemetry (rows/sec, batch duration). Returns the listener
-    so callers can ``spark.streams.removeListener`` it."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _Listener(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            telemetry.record_event("query_started", str(event.id))
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            telemetry.record_event(
-                "micro_batch",
-                f"rows={p.numInputRows} ms={p.batchDuration}",
-                int(p.batchId),
-            )
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            telemetry.record_event("query_terminated", str(event.id))
-
-    listener = _Listener()
-    spark.streams.addListener(listener)
-    return listener

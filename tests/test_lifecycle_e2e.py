@@ -246,10 +246,10 @@ def test_per_reducer_rewind_overrides(spark, chain, tmp_path):
         )
         assert dupes == 0, t
 
-    # undeclared ownership + overrides must be rejected, and a rejected
+    # a reducer both overridden and excluded is rejected, and a rejected
     # rewind moves no window or cursor: the same feed again is skipped
     reg2 = ReducerRegistry()
-    reg2.register(Reducer("loose", _mk("rw_loose")))  # no tables=
+    reg2.register(Reducer("solo", _mk("rw_solo"), tables=["rw_solo"]))
     store2 = ParquetStateStore(str(tmp_path / "store2"))
     d3 = IndexDriver(
         spark, reg2, store2, blocks, batch_size=100, max_delay_s=1e9
@@ -257,12 +257,49 @@ def test_per_reducer_rewind_overrides(spark, chain, tmp_path):
     d3.run(fwd(slots[:200]))
     floor = d3.graph_resume_slot()
     assert floor == slots[199]
-    with pytest.raises(ValueError, match="table ownership"):
-        d3.rewind_to(slots[100], overrides={"loose": slots[50]})
+    with pytest.raises(ValueError, match="both overridden and excluded"):
+        d3.rewind_to(slots[100], overrides={"solo": slots[50]}, exclude=["solo"])
     assert d3.graph_resume_slot() == floor
     d3.run(fwd(slots[:200]))
-    rows = store2.read_table(spark, "rw_loose")
+    rows = store2.read_table(spark, "rw_solo")
     assert rows.count() == rows.select("slot").distinct().count() == 200
+
+
+def test_undeclared_output_table_rejected(spark, chain, tmp_path):
+    """A reducer owns only the tables it declares. An output outside
+    ``tables`` would escape every retraction, so a rewind would leave
+    its rows above the cut and a replay would duplicate them; the
+    epoch fails instead, before anything is written."""
+    from argus_spark.lifecycle.dag import Reducer, ReducerRegistry
+
+    blocks, _, slots = chain
+
+    def _apply(ctx):
+        rows = ctx.blocks.select("slot", "hash")
+        return {"own_a": rows, "stray": rows}
+
+    reg = ReducerRegistry().register(Reducer("a", _apply, tables=["own_a"]))
+    store = ParquetStateStore(str(tmp_path / "store"))
+    d = IndexDriver(spark, reg, store, blocks, batch_size=30, max_delay_s=1e9)
+    with pytest.raises(ValueError, match=r"'a'.*stray"):
+        d.run(fwd(slots[:60]))
+    assert store.current_manifest()["tables"] == {}
+    assert d.graph_resume_slot() == -1
+
+
+def test_shared_table_declaration_rejected():
+    """Two reducers declaring one table would each cut it at their own
+    rewind point, and the last cut would win: an overridden reducer
+    keeps its rows above its cut and a replay duplicates them. The
+    registry refuses the second declaration."""
+    from argus_spark.lifecycle.dag import GraphError, Reducer, ReducerRegistry
+
+    reg = ReducerRegistry().register(Reducer("x", lambda ctx: {}, tables=["shared"]))
+    with pytest.raises(GraphError, match=r"\['shared'\].*'x'.*'y'"):
+        reg.register(
+            Reducer("y", lambda ctx: {}, depends_on="x", tables=["shared", "y_own"])
+        )
+    assert [r.name for r in reg] == ["x"]
 
 
 def test_deep_rollback_guarded(spark, chain, tmp_path):

@@ -31,6 +31,28 @@ from tests.conftest import SF_SMOKE
 N_BLOCKS = 12
 
 
+def _block_registry() -> ReducerRegistry:
+    return ReducerRegistry().register(
+        Reducer("block_tests", _blocks_reducer, tables=["block_tests"])
+    )
+
+
+class _FailNthPublish(ParquetStateStore):
+    """Fails only its ``n``-th manifest publish (0-based) and publishes
+    every other one: a transient commit failure that the same driver
+    then retries."""
+
+    def __init__(self, root: str, n: int) -> None:
+        super().__init__(root)
+        self._left = n
+
+    def _publish(self, manifest: dict) -> None:
+        self._left -= 1
+        if self._left == -1:
+            raise RuntimeError("injected publish failure")
+        super()._publish(manifest)
+
+
 @pytest.fixture(scope="module")
 def chain(spark):
     blocks = synth_blocks(spark, SF_SMOKE).orderBy("slot").limit(N_BLOCKS).cache()
@@ -95,7 +117,7 @@ def test_random_reorg_scripts_match_model(spark, chain, data, batch_size):
 
     with tempfile.TemporaryDirectory() as td:
         store = ParquetStateStore(os.path.join(td, "store"))
-        reg = ReducerRegistry().register(Reducer("block_tests", _blocks_reducer))
+        reg = _block_registry()
         driver = IndexDriver(
             spark, reg, store, blocks,
             batch_size=batch_size, window_k=5,
@@ -210,7 +232,8 @@ def test_random_crash_point_replay_converges(spark, chain, batch_size, crash_at)
     restart with a fresh store handle + driver, replay the FULL feed —
     the final table must equal the full prefix exactly (no lost blocks
     from the torn epoch, no duplicates from the replay), for every
-    (batch size, crash point) combination."""
+    (batch size, crash point) combination. The same holds when the
+    driver that saw the failed publish retries the feed itself."""
     from argus_spark.lifecycle.replay_queries import _CrashingStore
 
     blocks, slots = chain
@@ -219,7 +242,7 @@ def test_random_crash_point_replay_converges(spark, chain, batch_size, crash_at)
 
     with tempfile.TemporaryDirectory() as td:
         root = os.path.join(td, "store")
-        reg = ReducerRegistry().register(Reducer("block_tests", _blocks_reducer))
+        reg = _block_registry()
         crashing = _CrashingStore(root, publishes_before_crash=crash_at)
         d1 = IndexDriver(
             spark, reg, crashing, blocks,
@@ -243,3 +266,41 @@ def test_random_crash_point_replay_converges(spark, chain, batch_size, crash_at)
         df = store.read_table(spark, "block_tests")
         got = sorted(r.slot for r in df.select("slot").collect())
         assert got == slots, (batch_size, crash_at)
+
+        # the same driver retries after its publish failed: the failed
+        # epoch's blocks were never committed, so the retry replays them
+        flaky = _FailNthPublish(os.path.join(td, "retry"), crash_at)
+        d3 = IndexDriver(spark, reg, flaky, blocks, batch_size=batch_size, window_k=5)
+        retried = False
+        try:
+            d3.run(events)
+        except RuntimeError:
+            retried = True
+            d3.run(events)
+        assert retried == (crash_at < n_epochs), (crash_at, n_epochs)
+        df = flaky.read_table(spark, "block_tests")
+        got = sorted(r.slot for r in df.select("slot").collect())
+        assert got == slots, ("same-driver retry", batch_size, crash_at)
+
+
+def test_failed_rewind_commit_moves_nothing(spark, chain, tmp_path):
+    """A rewind whose commit fails leaves the driver's windows and
+    cursors where the store still has them: the next run on the same
+    driver skips every committed block instead of replaying the rows
+    the failed retraction never deleted."""
+    blocks, slots = chain
+    events = [ChainEvent("roll_forward", block_slot=s) for s in slots]
+    store = _FailNthPublish(str(tmp_path / "store"), 1)  # the rewind's
+    d = IndexDriver(
+        spark, _block_registry(), store, blocks,
+        batch_size=len(slots), max_delay_s=1e9, window_k=5,
+    )
+    d.run(events)
+    floor = d.graph_resume_slot()
+    with pytest.raises(RuntimeError, match="injected"):
+        d.rewind_to(slots[len(slots) // 2])
+    assert d.graph_resume_slot() == floor == slots[-1]
+    assert d.run(events).skipped == len(slots)
+    df = store.read_table(spark, "block_tests")
+    got = sorted(r.slot for r in df.select("slot").collect())
+    assert got == slots

@@ -353,6 +353,19 @@ def test_driver_rejects_view_namespace_collisions(spark, tmp_path):
         IndexDriver(spark, reg, store, None)
 
 
+def test_roll_forward_without_slot_rejected(spark, tmp_path):
+    """A roll_forward with no block slot is a malformed feed event: the
+    driver fails loudly, as for an unknown action, instead of dropping
+    the event."""
+    from argus_spark.lifecycle.driver import ChainEvent, IndexDriver
+    from argus_spark.lifecycle.store import ParquetStateStore
+
+    reg = ReducerRegistry().register(Reducer("a", lambda ctx: {}))
+    d = IndexDriver(spark, reg, ParquetStateStore(str(tmp_path / "s")), None)
+    with pytest.raises(ValueError, match="block_slot"):
+        d.run([ChainEvent("roll_forward", block_slot=None)])
+
+
 class TestFsck:
     def _small_store(self, spark, tmp_path):
         from argus_spark.chain.synth import synth_watched

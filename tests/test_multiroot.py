@@ -200,8 +200,11 @@ def test_maintenance_compacts_only_own_tables(spark, blocks, tmp_path):
     assert store.read_table(spark, "root_a").count() == len(slots)
 
 
-def test_undeclared_tables_rejected(spark, blocks):
+def test_two_roots_claiming_one_table_rejected():
+    """Each root subgraph retracts and compacts only its own tables, so
+    two roots may not declare the same one: the registry refuses it."""
     reg = ReducerRegistry()
-    reg.register(Reducer("x", lambda ctx: {}))  # no declared tables
-    with pytest.raises(GraphError, match="ownership"):
-        MultiRootDriver(spark, reg, None, blocks)
+    reg.register(Reducer("x", lambda ctx: {}, tables=["x_own", "shared"]))
+    with pytest.raises(GraphError, match="shared"):
+        reg.register(Reducer("y", lambda ctx: {}, tables=["shared"]))
+    assert [r.name for r in reg.roots()] == ["x"]

@@ -55,9 +55,12 @@ def slots(blocks):
 def registry() -> ReducerRegistry:
     return (
         ReducerRegistry()
-        .register(Reducer("block_tests", _blocks_reducer))
+        .register(Reducer("block_tests", _blocks_reducer, tables=["block_tests"]))
         .register(
-            Reducer("transaction_tests", _transactions_reducer, depends_on="block_tests")
+            Reducer(
+                "transaction_tests", _transactions_reducer,
+                depends_on="block_tests", tables=["transaction_tests"],
+            )
         )
     )
 
