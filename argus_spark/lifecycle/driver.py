@@ -583,7 +583,7 @@ class IndexDriver:
             return
         for tbl in (t for r in self._order for t in r.tables):
             if len(self.store.table_groups(tbl)) >= self.compact_min_groups:
-                self.store.compact(self.spark, tbl, upto_slot=horizon)
+                self.store.compact(tbl, upto_slot=horizon)
         self.store.vacuum()
 
     def _state_rows(
@@ -670,7 +670,6 @@ class IndexDriver:
             appends={},
             states=lambda: rows,
             retract_from=cuts,
-            spark=self.spark,
             meta=meta or {"rollback_to": delete_from},
         )
         self._committed.update(rows)

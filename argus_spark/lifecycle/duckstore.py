@@ -282,7 +282,6 @@ class DuckDBStateStore:
         appends: dict[str, tuple[DataFrame, int, int]],
         states: Callable[[], dict[str, ReducerStateRow]] | None = None,
         retract_from: dict[str, int] | None = None,
-        spark: SparkSession | None = None,
         meta: dict[str, Any] | None = None,
         write_parts: int | None = None,
         write_shuffle: bool = False,
@@ -366,8 +365,9 @@ class DuckDBStateStore:
 
     # ---------------- maintenance (db-native no-ops) ----------------
 
-    def compact(self, spark: SparkSession, name: str, upto_slot: int) -> dict:
-        return self.current_manifest()  # the database maintains its own layout
+    def compact(self, name: str, upto_slot: int) -> dict:
+        """No-op: the database maintains its own layout."""
+        return self.current_manifest()
 
     def vacuum(self) -> int:
         """Sweep orphaned write-staging batches (crashes before COMMIT)
@@ -375,11 +375,12 @@ class DuckDBStateStore:
         safe when no epoch plans still lazily reference old exports —
         the driver calls this between epochs, after a commit returned.
         In-flight staging batches (registered by a concurrent commit's
-        phase 1) are never touched."""
+        phase 1) are never touched: the staging lock is held across the
+        sweep, so no commit registers a batch between the in-flight
+        snapshot and the listing. A commit never holds it together with
+        the store lock, so taking both here cannot deadlock."""
         removed = 0
-        with self._stage_lock:
-            inflight = set(self._inflight_stages)
-        with self._lock:
+        with self._stage_lock, self._lock:
             version = self._version()
             for d in os.listdir(self.staging_dir):
                 p = os.path.join(self.staging_dir, d)
@@ -398,7 +399,7 @@ class DuckDBStateStore:
                                 os.remove(target)
                             removed += 1
                     continue
-                if p in inflight:
+                if p in self._inflight_stages:
                     continue
                 shutil.rmtree(p, ignore_errors=True)
                 removed += 1

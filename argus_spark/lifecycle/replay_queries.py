@@ -427,8 +427,8 @@ def lifecycle_compact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Schedule over the first L = min(chain, 1500) blocks at batch 200:
     sync all L; compact every table's file-groups wholly at or below
-    horizon = slots[L//2] (frozen zone — raw concatenation, per-row
-    merge-on-read stamps preserved); EXCLUSIVE rollback to slots[3L//4]
+    horizon = slots[L//2] (frozen zone, merged by the store's in-process
+    rewrite); EXCLUSIVE rollback to slots[3L//4]
     (above the horizon, so retraction touches only live/straddling
     groups); a FRESH driver resumes the branch to 7L//8; vacuum
     reclaims the superseded pre-compaction groups; fsck audits the
@@ -446,7 +446,7 @@ def lifecycle_compact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         d.run(_fwd(slots))
         for t in sorted(store.current_manifest()["tables"]):
-            store.compact(spark, t, upto_slot=slots[horizon])
+            store.compact(t, upto_slot=slots[horizon])
         d.run(
             [
                 ChainEvent(

@@ -22,7 +22,8 @@ below X — is untouched. Retraction cost scales with reorg depth, not
 table size: the property that survives at 100 TB. In-place updates are
 re-architected as appends (spend marks live in their own slot-keyed
 table), so every committed table is a slot-keyed append table and this
-holds for every mutation.
+holds for every mutation. Only appends run Spark jobs: the rewrite
+and compaction copy rows in-process (``ParquetStateStore._rewrite``).
 
 At deployment scale the same contract maps 1:1 onto Delta/Iceberg
 (transactional snapshot + MERGE/DELETE); this store keeps v1 dependency-
@@ -44,6 +45,7 @@ from typing import Any
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from argus_spark.lifecycle.state import Point
@@ -121,6 +123,11 @@ def checkpoint_errors(states: dict[str, ReducerStateRow]) -> list[str]:
     return errors
 
 
+def group_paths(manifest: dict) -> set[str]:
+    """The paths of every file-group ``manifest`` references."""
+    return {g["path"] for groups in manifest["tables"].values() for g in groups}
+
+
 class ParquetStateStore:
     def __init__(self, root: str) -> None:
         self.root = root
@@ -179,15 +186,23 @@ class ParquetStateStore:
         finally:
             os.remove(tmp)
         # groups referenced by a published manifest are no longer
-        # in-flight (vacuum protects them via the manifest instead).
-        # Groups of a FAILED commit stay registered for the process
-        # lifetime — a bounded leak, swept by the next process's vacuum.
+        # in-flight (vacuum protects them via the manifest instead);
+        # a commit that fails before this point releases its own
+        self._release(group_paths(manifest))
+
+    def _claim(self, name: str, claimed: list[str] | None = None) -> str:
+        """A new group path for ``name``, registered in-flight before
+        anything is written there (and appended to ``claimed``)."""
+        rel = os.path.join(DATA_DIR, name, f"g-{uuid.uuid4().hex}")
         with self._inflight_lock:
-            self._inflight_groups -= {
-                g["path"]
-                for groups in manifest["tables"].values()
-                for g in groups
-            }
+            self._inflight_groups.add(rel)
+        if claimed is not None:
+            claimed.append(rel)
+        return rel
+
+    def _release(self, rels) -> None:
+        with self._inflight_lock:
+            self._inflight_groups.difference_update(rels)
 
     # ---------------- reads ----------------
 
@@ -247,17 +262,24 @@ class ParquetStateStore:
         groups = self.table_groups(name, min_slot, manifest)
         if not groups:
             return None
-        # a file list, not the group directories: pyarrow takes a list
-        # of files only, and the files' schemas may differ in
-        # nullability (a copy-on-write rewrite reads back as nullable)
-        files = [
-            f
-            for g in groups
-            for f in pads.dataset(
-                os.path.join(self.root, g.path), format="parquet"
-            ).files
-        ]
-        return pads.dataset(files, format="parquet").to_table()
+        return self._dataset(groups).to_table()
+
+    def _dataset(self, groups: list[FileGroup]) -> pads.Dataset:
+        """One dataset over the data files of ``groups``: a file list, not
+        the group directories, because pyarrow takes a list of files only
+        and the files' schemas may differ in nullability (a rewritten
+        group is all nullable); the first file's schema wins. A missing
+        group directory raises ``FileNotFoundError``."""
+        return pads.dataset(
+            [
+                f
+                for g in groups
+                for f in pads.dataset(
+                    os.path.join(self.root, g.path), format="parquet"
+                ).files
+            ],
+            format="parquet",
+        )
 
     def reducer_states(self) -> dict[str, ReducerStateRow]:
         out = {}
@@ -281,19 +303,51 @@ class ParquetStateStore:
         hi: int,
         parts: int | None = None,
         shuffle: bool = False,
+        claimed: list[str] | None = None,
     ) -> FileGroup | None:
-        rel = os.path.join(DATA_DIR, name, f"g-{uuid.uuid4().hex}")
+        """The append path: one Spark write of an epoch's rows."""
+        rel = self._claim(name, claimed)
         full = os.path.join(self.root, rel)
-        with self._inflight_lock:
-            self._inflight_groups.add(rel)
         df = write_width(df, parts, shuffle)
         df.write.mode("overwrite").parquet(full)
         self._schemas[name] = df.schema
         rows = pads.dataset(full, format="parquet").count_rows()
         if rows == 0:
             shutil.rmtree(full, ignore_errors=True)
-            with self._inflight_lock:
-                self._inflight_groups.discard(rel)
+            self._release([rel])
+            return None
+        return FileGroup(path=rel, min_slot=lo, max_slot=hi, rows=rows)
+
+    def _rewrite(
+        self, name: str, groups: list[FileGroup], cut: int | None = None,
+        claimed: list[str] | None = None,
+    ) -> FileGroup | None:
+        """Stream the rows of ``groups`` (``slot < cut`` only, if given)
+        into one new group in-process, recording their slot range; None
+        when no row is left. Written nullable (a non-null schema turns
+        another file's null into 0) and with INT96 timestamps, as Spark
+        writes them (INT64 nanos read back as bigint under nanosAsLong)."""
+        rel = self._claim(name, claimed)
+        full = os.path.join(self.root, rel)
+        ds = self._dataset(groups)
+        schema = pa.schema([f.with_nullable(True) for f in ds.schema], ds.schema.metadata)
+        rows, lo, hi = 0, float("inf"), float("-inf")
+        os.makedirs(full)
+        with pq.ParquetWriter(
+            os.path.join(full, "part-0.parquet"), schema,
+            use_deprecated_int96_timestamps=True,
+        ) as writer:
+            for batch in ds.replace_schema(schema).to_batches(
+                filter=None if cut is None else pc.field("slot") < cut
+            ):
+                if batch.num_rows:
+                    writer.write_batch(batch)
+                    mm = pc.min_max(batch["slot"])
+                    rows += batch.num_rows
+                    lo, hi = min(lo, mm["min"].as_py()), max(hi, mm["max"].as_py())
+        if not rows:
+            shutil.rmtree(full, ignore_errors=True)
+            self._release([rel])
             return None
         return FileGroup(path=rel, min_slot=lo, max_slot=hi, rows=rows)
 
@@ -302,7 +356,6 @@ class ParquetStateStore:
         appends: dict[str, tuple[DataFrame, int, int]],
         states: Callable[[], dict[str, ReducerStateRow]] | None = None,
         retract_from: dict[str, int] | None = None,
-        spark: SparkSession | None = None,
         meta: dict[str, Any] | None = None,
         write_parts: int | None = None,
         write_shuffle: bool = False,
@@ -329,40 +382,49 @@ class ParquetStateStore:
 
         ``retract_from[table] = slot`` deletes ``slot >= slot`` from each
         listed table (A12 reorg retraction, A17 per-reducer rewind
-        overrides); unlisted tables are untouched.
+        overrides); unlisted tables are untouched. Only appends start
+        Spark jobs: a straddling group is rewritten by ``_rewrite``.
 
         ``states`` — optional zero-arg callable returning the checkpoint
         rows, called after the data writes finish but before the
         manifest is assembled. Lets the driver overlap control-plane
         work (the tip-points collect) with the epoch's data writes
         instead of serializing it in front of them.
+
+        A commit that raises before its publish releases the groups it
+        wrote from the in-flight set, so the next ``vacuum`` sweeps them.
         """
-        appended = self._write_groups_parallel(
-            [(n, df, lo, hi) for n, (df, lo, hi) in appends.items()],
-            write_parts, write_shuffle,
-        )
-        with self._publish_lock:
-            manifest = self.current_manifest()
-            tables: dict[str, list[dict]] = {
-                k: list(v) for k, v in manifest["tables"].items()
-            }
-            if retract_from:
-                assert spark is not None, "retraction needs a SparkSession"
-                tables = self._retract_groups(spark, tables, retract_from)
-            for name, group in appended:
-                if group is not None:
-                    tables.setdefault(name, []).append(group.as_dict())
-            new_manifest = self._assemble(
-                manifest, tables, states() if states else None, meta
+        claimed: list[str] = []
+        try:
+            appended = self._write_groups_parallel(
+                [(n, df, lo, hi) for n, (df, lo, hi) in appends.items()],
+                write_parts, write_shuffle, claimed,
             )
-            self._publish(new_manifest)
+            with self._publish_lock:
+                manifest = self.current_manifest()
+                tables: dict[str, list[dict]] = {
+                    k: list(v) for k, v in manifest["tables"].items()
+                }
+                if retract_from:
+                    self._retract_groups(tables, retract_from, claimed)
+                for name, group in appended:
+                    if group is not None:
+                        tables.setdefault(name, []).append(group.as_dict())
+                new_manifest = self._assemble(
+                    manifest, tables, states() if states else None, meta
+                )
+                self._publish(new_manifest)
+        except BaseException:
+            self._release(claimed)
+            raise
         return new_manifest
 
     def _write_groups_parallel(
         self,
         write_tasks: list[tuple],
         write_parts: int | None,
-        write_shuffle: bool = False,
+        write_shuffle: bool,
+        claimed: list[str],
     ) -> list[tuple[str, FileGroup | None]]:
         """ALL tables write concurrently (see commit docstring:
         block-manager write locks make cross-level concurrency safe and
@@ -370,23 +432,13 @@ class ParquetStateStore:
         the manifest publish."""
         from concurrent.futures import ThreadPoolExecutor
 
-        if len(write_tasks) > 1:
-            with ThreadPoolExecutor(max_workers=min(8, len(write_tasks))) as ex:
-                return list(
-                    ex.map(
-                        lambda t: (
-                            t[0],
-                            self._write_group(
-                                *t, parts=write_parts, shuffle=write_shuffle
-                            ),
-                        ),
-                        write_tasks,
-                    )
-                )
-        return [
-            (t[0], self._write_group(*t, parts=write_parts, shuffle=write_shuffle))
-            for t in write_tasks
-        ]
+        def write(t: tuple) -> tuple[str, FileGroup | None]:
+            return t[0], self._write_group(*t, write_parts, write_shuffle, claimed)
+
+        if len(write_tasks) <= 1:
+            return [write(t) for t in write_tasks]
+        with ThreadPoolExecutor(max_workers=min(8, len(write_tasks))) as ex:
+            return list(ex.map(write, write_tasks))
 
     def _assemble(
         self,
@@ -414,63 +466,44 @@ class ParquetStateStore:
 
     def _retract_groups(
         self,
-        spark: SparkSession,
         tables: dict[str, list[dict]],
         cuts: dict[str, int],
-    ) -> dict[str, list[dict]]:
-        """B6 as file-group surgery on each table in ``cuts``: drop
-        groups fully ≥ its cut, rewrite straddling groups filtered to
+        claimed: list[str],
+    ) -> None:
+        """B6 as file-group surgery on each table in ``cuts``, in place:
+        drop groups fully ≥ its cut, rewrite straddling groups filtered to
         ``slot < cut``, keep groups fully below untouched. Tables not in
         ``cuts`` are untouched — per-root processors share a store but
         roll back independently (the reference's one-chain-connection-
         per-root shape), and per-reducer rewind overrides
         (CardanoIndexWorker.cs:181-202) give each table its own cut."""
-        out: dict[str, list[dict]] = {}
-        for name, groups in tables.items():
-            if name not in cuts:
-                out[name] = list(groups)
-                continue
-            cut = cuts[name]
-            kept: list[dict] = []
-            for gd in groups:
+        for name in cuts.keys() & tables.keys():
+            cut, kept = cuts[name], []
+            for gd in tables[name]:
                 g = FileGroup.from_dict(gd)
-                if g.min_slot >= cut:
-                    continue  # fully rolled back — drop
                 if g.max_slot < cut:
                     kept.append(gd)  # fully retained — untouched
-                    continue
-                # straddles the fork — copy-on-write rewrite
-                df = spark.read.parquet(os.path.join(self.root, g.path)).filter(
-                    f"slot < {cut}"
-                )
-                ng = self._write_group(name, df, g.min_slot, cut - 1)
-                if ng is not None:
-                    # record the range of the rows kept, not [min_slot,
-                    # cut - 1]: a compacted balance group cut between
-                    # two snapshots would otherwise claim a tip no
-                    # snapshot sits at (see ReducerContext.table_tip)
-                    ng.min_slot, ng.max_slot = self._slot_range(ng.path)
-                    kept.append(ng.as_dict())
-            out[name] = kept
-        return out
+                elif g.min_slot < cut:
+                    # straddles the fork — copy-on-write rewrite, which
+                    # records the range of the rows kept, not [min_slot,
+                    # cut - 1]: a compacted balance group cut between two
+                    # snapshots would otherwise claim a tip no snapshot
+                    # sits at (see ReducerContext.table_tip)
+                    ng = self._rewrite(name, [g], cut, claimed)
+                    if ng is not None:
+                        kept.append(ng.as_dict())
+                # else fully rolled back — dropped
+            tables[name] = kept
 
-    def _slot_range(self, rel: str) -> tuple[int, int]:
-        """Lowest and highest ``slot`` in the group at ``rel``, by a
-        one-column read."""
-        slots = pads.dataset(
-            os.path.join(self.root, rel), format="parquet"
-        ).to_table(columns=["slot"])["slot"]
-        mm = pc.min_max(slots)
-        return mm["min"].as_py(), mm["max"].as_py()
-
-    def compact(self, spark: SparkSession, name: str, upto_slot: int) -> dict:
+    def compact(self, name: str, upto_slot: int) -> dict:
         """Frozen-zone compaction, bounding group fan-out: merge the
         groups of ``name`` wholly at or below ``upto_slot`` (the driver
         passes the rollback horizon, tip − max_rollback_slots) into one
-        group by raw file concatenation, and publish a new manifest; the
-        old groups become vacuum-able garbage. Groups above the horizon
-        keep their boundaries, so retraction cost stays O(reorg depth).
-        At 100 TB this runs per slot-range partition, not whole-table."""
+        group by ``_rewrite``, recording the union of their slot ranges,
+        and publish a new manifest; the old groups become vacuum-able
+        garbage. Groups above the horizon keep their boundaries, so
+        retraction cost stays O(reorg depth). At 100 TB this runs per
+        slot-range partition, not whole-table."""
         # the whole read→write→publish runs under the publish lock: the
         # merged group replaces groups chosen from THIS manifest, so a
         # concurrent commit must not publish between the read and this
@@ -482,21 +515,24 @@ class ParquetStateStore:
             live = [g for g in groups if g.max_slot > upto_slot]
             if len(frozen) < 2:
                 return manifest
-            raw = spark.read.parquet(
-                *[os.path.join(self.root, g.path) for g in frozen]
-            )
-            lo = min(g.min_slot for g in frozen)
-            hi = max(g.max_slot for g in frozen)
-            group = self._write_group(name, raw, lo, hi)
-            tables = {k: list(v) for k, v in manifest["tables"].items()}
-            tables[name] = ([group.as_dict()] if group else []) + [
-                g.as_dict() for g in live
-            ]
-            new_manifest = self._assemble(
-                manifest, tables, None,
-                {"compacted": name, "upto_slot": upto_slot},
-            )
-            self._publish(new_manifest)
+            claimed: list[str] = []
+            try:
+                group = self._rewrite(name, frozen, claimed=claimed)
+                if group is not None:
+                    group.min_slot = min(g.min_slot for g in frozen)
+                    group.max_slot = max(g.max_slot for g in frozen)
+                tables = {k: list(v) for k, v in manifest["tables"].items()}
+                tables[name] = ([group.as_dict()] if group else []) + [
+                    g.as_dict() for g in live
+                ]
+                new_manifest = self._assemble(
+                    manifest, tables, None,
+                    {"compacted": name, "upto_slot": upto_slot},
+                )
+                self._publish(new_manifest)
+            except BaseException:
+                self._release(claimed)
+                raise
         return new_manifest
 
     def fsck(self, spark: SparkSession | None = None) -> dict:
@@ -570,34 +606,37 @@ class ParquetStateStore:
                             f" outside recorded [{g.min_slot},{g.max_slot}]"
                         )
         errors += checkpoint_errors(self.reducer_states())
-        live = {
-            g["path"] for groups in manifest["tables"].values() for g in groups
-        }
         with self._inflight_lock:
-            live |= self._inflight_groups
-        orphans: list[str] = []
-        data_root = os.path.join(self.root, DATA_DIR)
-        if os.path.isdir(data_root):
-            for table in os.listdir(data_root):
-                tdir = os.path.join(data_root, table)
-                if not os.path.isdir(tdir):
-                    # A stray plain file under data/ is an integrity
-                    # FINDING, not a crash (fsck must degrade to a
-                    # report on any filesystem state it meets).
-                    errors.append(
-                        f"non-directory entry in data root: {os.path.join(DATA_DIR, table)}"
-                    )
-                    continue
-                for group in os.listdir(tdir):
-                    rel = os.path.join(DATA_DIR, table, group)
-                    if rel not in live:
-                        orphans.append(rel)
+            orphans, strays = self._unreferenced(manifest)
+        # a stray plain file under data/ is an integrity FINDING, not a
+        # crash (fsck must degrade to a report on any filesystem state)
+        errors += [f"non-directory entry in data root: {p}" for p in strays]
         return {
             "ok": not errors,
             "errors": errors,
             "orphans": sorted(orphans),
             "groups_checked": checked,
         }
+
+    def _unreferenced(self, manifest: dict) -> tuple[list[str], list[str]]:
+        """The group directories under ``data/`` that neither ``manifest``
+        nor an in-flight commit references, and the non-directory
+        entries found where table directories belong. The caller holds
+        ``_inflight_lock``."""
+        live = group_paths(manifest) | self._inflight_groups
+        orphans: list[str] = []
+        strays: list[str] = []
+        data_root = os.path.join(self.root, DATA_DIR)
+        for table in os.listdir(data_root) if os.path.isdir(data_root) else []:
+            tdir = os.path.join(data_root, table)
+            if not os.path.isdir(tdir):
+                strays.append(os.path.join(DATA_DIR, table))
+                continue
+            for group in os.listdir(tdir):
+                rel = os.path.join(DATA_DIR, table, group)
+                if rel not in live:
+                    orphans.append(rel)
+        return orphans, strays
 
     def vacuum(self) -> int:
         """Remove data file-groups that are neither referenced by the
@@ -606,23 +645,14 @@ class ParquetStateStore:
         absence alone doesn't mean garbage — with concurrent per-root
         drivers sharing one store, sweeping those would delete another
         driver's just-staged epoch and its subsequent publish would
-        reference missing paths). Returns count removed."""
-        live = {
-            g["path"]
-            for groups in self.current_manifest()["tables"].values()
-            for g in groups
-        }
+        reference missing paths). Returns count removed.
+
+        The in-flight lock is held from the manifest read to the end of
+        the sweep: a commit that publishes in between leaves the
+        in-flight set only after its manifest is on disk, so its groups
+        are in one of the two sets vacuum consults."""
         with self._inflight_lock:
-            live |= self._inflight_groups
-        removed = 0
-        data_root = os.path.join(self.root, DATA_DIR)
-        for table in os.listdir(data_root):
-            tdir = os.path.join(data_root, table)
-            if not os.path.isdir(tdir):
-                continue  # stray plain file: fsck reports it, vacuum skips it
-            for group in os.listdir(tdir):
-                rel = os.path.join(DATA_DIR, table, group)
-                if rel not in live:
-                    shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
-                    removed += 1
-        return removed
+            orphans, _ = self._unreferenced(self.current_manifest())
+            for rel in orphans:
+                shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
+        return len(orphans)

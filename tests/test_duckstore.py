@@ -215,3 +215,50 @@ def test_fsck_clean_and_with_injected_anomalies(spark, tmp_path):
     rep = store.fsck()
     assert not rep["ok"] and any("missing" in e for e in rep["errors"]), rep
     store.close()
+
+
+def test_vacuum_spares_a_batch_staged_during_its_sweep(spark, tmp_path):
+    """A commit can stage its batch while another root's vacuum runs. A
+    vacuum that took its in-flight snapshot before the batch registered
+    and listed the staging directory after it deleted the staged files,
+    and the commit then published without the rows."""
+    import threading
+
+    store = DuckDBStateStore(str(tmp_path / "argus.duckdb"))
+    a = spark.createDataFrame([(1, 100)], "slot long, x int")
+    store.commit(appends={"a": (a, 1, 1)})
+    entered, release = threading.Event(), threading.Event()
+    inner = store._version
+
+    def held_version():
+        if threading.current_thread().name == "vacuum":
+            entered.set()
+            release.wait(60)
+        return inner()
+
+    store._version = held_version
+    errors: list[Exception] = []
+
+    def _run(fn):
+        try:
+            fn()
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    vacuum = threading.Thread(target=_run, args=(store.vacuum,), name="vacuum")
+    vacuum.start()
+    assert entered.wait(60)
+    b = spark.createDataFrame([(s, s) for s in range(100, 105)], "slot long, x int")
+    committer = threading.Thread(
+        target=_run, args=(lambda: store.commit(appends={"b": (b, 100, 104)}),)
+    )
+    committer.start()
+    committer.join(3)  # give the commit every chance to stage first
+    release.set()
+    vacuum.join(120)
+    committer.join(120)
+    assert not vacuum.is_alive() and not committer.is_alive()
+    assert not errors, errors
+    got = store.read_arrow("b")
+    assert got is not None and got.num_rows == 5
+    store.close()

@@ -13,11 +13,14 @@ from __future__ import annotations
 import os
 import sys
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from argus_spark.chain.synth import synth_blocks, synth_inputs, synth_outputs, synth_watched
 from argus_spark.lifecycle.driver import ChainEvent, IndexDriver
@@ -426,7 +429,36 @@ def test_rewind_into_compacted_zone_matches_oracle(spark, chain, tmp_path):
     assert driver_balances(spark, store) == expected_balances(
         spark, upto_slot=snaps[-2], unspend_from=snaps[-2] + 1
     )
+    fresh_store_reads_match(spark, store.root)
     d2 = IndexDriver(spark, reg, store, blocks, batch_size=200,
                      max_delay_s=1e9, max_rollback_slots=10**12)
     d2.run(fwd(slots))
     assert driver_balances(spark, store) == expected_balances(spark)
+
+
+def fresh_store_reads_match(spark, root):
+    """A new store on ``root`` knows no schema, so Spark infers each
+    table's from the files, rewritten groups included: ``read_table``
+    must return what ``read_arrow`` does (timestamps compared as epoch
+    microseconds), ``created_at`` must read as a timestamp, and deep
+    ``fsck`` must pass."""
+    store = ParquetStateStore(root)
+    assert not store._schemas
+    for name in sorted(store.current_manifest()["tables"]):
+        df = store.read_table(spark, name)
+        ts = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampType)]
+        if name == "block_tests":
+            assert ts == ["created_at"], df.schema
+        table = store.read_arrow(name)
+        for c in ts:
+            df = df.withColumn(c, F.unix_micros(c))
+            table = table.set_column(
+                table.schema.get_field_index(c), c,
+                pc.cast(pc.cast(table[c], pa.timestamp("us")), pa.int64()),
+            )
+        cols = df.columns
+        want = sorted(tuple(r[c] for c in cols) for r in df.collect())
+        got = sorted(tuple(r[c] for c in cols) for r in table.to_pylist())
+        assert got == want, name
+    report = store.fsck(spark)
+    assert report["ok"], report

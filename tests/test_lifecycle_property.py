@@ -53,6 +53,25 @@ class _FailNthPublish(ParquetStateStore):
         super()._publish(manifest)
 
 
+def _unreferenced_after_vacuum(store: ParquetStateStore) -> set[str]:
+    """Group directories still on disk after ``vacuum`` that the current
+    manifest does not reference: the groups of a failed commit must not
+    stay protected as in-flight."""
+    store.vacuum()
+    data = os.path.join(store.root, "data")
+    on_disk = {
+        os.path.join("data", t, g)
+        for t in os.listdir(data)
+        for g in os.listdir(os.path.join(data, t))
+    }
+    live = {
+        g["path"]
+        for groups in store.current_manifest()["tables"].values()
+        for g in groups
+    }
+    return on_disk - live
+
+
 @pytest.fixture(scope="module")
 def chain(spark):
     blocks = synth_blocks(spark, SF_SMOKE).orderBy("slot").limit(N_BLOCKS).cache()
@@ -281,6 +300,7 @@ def test_random_crash_point_replay_converges(spark, chain, batch_size, crash_at)
         df = flaky.read_table(spark, "block_tests")
         got = sorted(r.slot for r in df.select("slot").collect())
         assert got == slots, ("same-driver retry", batch_size, crash_at)
+        assert _unreferenced_after_vacuum(flaky) == set()
 
 
 def test_failed_rewind_commit_moves_nothing(spark, chain, tmp_path):
@@ -304,3 +324,5 @@ def test_failed_rewind_commit_moves_nothing(spark, chain, tmp_path):
     df = store.read_table(spark, "block_tests")
     got = sorted(r.slot for r in df.select("slot").collect())
     assert got == slots
+    # the failed rewind's rewritten group is garbage, not in-flight
+    assert _unreferenced_after_vacuum(store) == set()

@@ -113,7 +113,7 @@ def test_read_arrow_matches_read_table(spark, tmp_path, kind):
     same(store.current_manifest())
 
     # straddling retraction: group [20, 29] keeps slots 20 and 23
-    store.commit(appends={}, retract_from={"t": 25}, spark=spark)
+    store.commit(appends={}, retract_from={"t": 25})
     same(store.current_manifest())
     assert rows(store.read_arrow("t"), cols)[-1] == (23, 203)
     if kind == "parquet":
@@ -121,7 +121,7 @@ def test_read_arrow_matches_read_table(spark, tmp_path, kind):
         assert [(g.min_slot, g.max_slot) for g in straddled] == [(20, 23)]
 
     # frozen-zone compaction merges [0, 9] and [10, 19] into one group
-    store.compact(spark, "t", upto_slot=19)
+    store.compact("t", upto_slot=19)
     if kind == "parquet":
         assert len(store.table_groups("t")) == 2
     same(store.current_manifest())
@@ -182,3 +182,36 @@ def test_balance_lookup_runs_no_spark_job(spark, chain, tmp_path):
     got = current_balances(spark, store).filter(F.col("address_name") == name).collect()
     assert len(got) == 1 and got[0]["slot"] == tip
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
+def test_retraction_and_compaction_run_no_spark_job(spark, chain, tmp_path):
+    """Retraction and compaction copy committed rows in-process: a
+    rewind that cuts inside the newest group of every table, and a
+    compaction of every table, start no Spark job."""
+    blocks, watched, slots = chain
+    store = ParquetStateStore(str(tmp_path / "store"))
+    d = IndexDriver(
+        spark, build_example_registry(spark, watched), store, blocks,
+        batch_size=20, max_delay_s=1e9,
+    )
+    d.run(fwd(slots[:60]))
+    newest = {
+        t: max(store.table_groups(t), key=lambda g: g.max_slot)
+        for t in store.current_manifest()["tables"]
+    }
+    cut = slots[50]
+    assert len(newest) == 5
+    assert all(g.min_slot < cut <= g.max_slot for g in newest.values()), newest
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    d.rewind_to(cut)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    for t in newest:
+        store.compact(t, upto_slot=cut)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+    # the rewind kept the newest groups' rows below the cut, and each
+    # table is now one compacted group
+    assert all(len(store.table_groups(t)) == 1 for t in newest)
+    assert store.read_table(spark, "block_tests").count() == 50
+    assert store.fsck(spark)["ok"]
